@@ -6,55 +6,32 @@ import org.apache.spark.sql.functions._
 /** Loaders for the driver-provided parquet tables (see TESTDATA.md).
   *
   * Design notes for scale: every loader returns a plain scan `DataFrame` so
-  * Catalyst can push filters/projections into the parquet reader. No caching
-  * here — callers decide (only small dims like `region`/`nation`/`customer`
-  * are broadcast-worthy).
+  * Catalyst can push filters/projections into the parquet reader. No rows
+  * are cached here — callers decide (only small dims like
+  * `region`/`nation`/`customer` are broadcast-worthy); only the resolved
+  * scan plan is memoized, see [[scanCache]].
   */
 object Tables {
 
-  /** Session-scoped memo of the resolved base-table scans (r21, guide
-    * §5/§6): `spark.read.parquet` re-lists the path and re-reads a
-    * parquet footer for schema inference ON THE DRIVER at every call —
-    * pure metadata work a production deployment amortizes in its
-    * catalog/metastore, but which a 200-query registry re-pays on every
-    * invocation of every query. The memoized DataFrame is a resolved
-    * scan PLAN (file index + schema; execution still reads the parquet
-    * bytes each run — no rows are cached), keyed on the table's current
-    * (name, length, mtime) listing so a table that GROWS at the same
-    * path (the incremental-append corpora the *IncrSpec suites and the
-    * nightly exercise) mints a fresh entry — one cheap `listStatus` per
-    * call buys skipping the footer read and relation resolution.
-    * Session-keyed, swept on session stop (the spreadCache lifecycle).
+  /** The resolved base-table scans, memoized per session on the table's
+    * [[Listing]] token (lifecycle: [[Memo]]). `spark.read.parquet`
+    * re-lists the path and re-reads a parquet footer for schema inference
+    * ON THE DRIVER at every call — pure metadata work a production
+    * deployment amortizes in its catalog/metastore, but which a 200-query
+    * registry re-pays on every invocation of every query. The memoized
+    * DataFrame is a resolved scan PLAN (file index + schema; execution
+    * still reads the parquet bytes each run — no rows are cached). A
+    * table that GROWS at the same path (the incremental-append corpora
+    * the *IncrSpec suites and the nightly exercise) mints a new token,
+    * which supersedes the old entry.
     */
-  private val scanCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-
-  private def listingToken(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def entries(dir: org.apache.hadoop.fs.Path, depth: Int): Seq[String] =
-      fs.listStatus(dir).toSeq
-        .filterNot(_.getPath.getName.startsWith("_"))
-        .flatMap { st =>
-          if (st.isDirectory && depth > 0) entries(st.getPath, depth - 1)
-          else Seq(s"${st.getPath.getName}|${st.getLen}|${st.getModificationTime}")
-        }
-    val st = fs.getFileStatus(p)
-    if (st.isDirectory) entries(p, 2).sorted.mkString("\n")
-    else s"${p.getName}|${st.getLen}|${st.getModificationTime}"
-  }
+  private[graft] val scanCache = new Memo[String, DataFrame]()
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    scanCache.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(scanCache.remove)
     val path = s"$dir/$name.parquet"
-    val token = listingToken(spark, path)
-    // drop superseded listings of the same path so a growing table
-    // can't accumulate stale plan entries
-    scanCache.keys
-      .filter(k => k._1 == spark && k._2 == path && k._3 != token)
-      .foreach(scanCache.remove)
-    scanCache.getOrElseUpdate((spark, path, token),
+    // a missing path lists empty and the read raises Spark's
+    // PATH_NOT_FOUND naming it; a failed build memoizes nothing
+    scanCache.latest(spark, path, Listing.token(spark, path))(
       spark.read.parquet(path))
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Memo, Q, Tables}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,20 +20,18 @@ object Curation {
 
   private def docs(s: SparkSession, d: String) = Tables.documents(s, d)
 
-  /** Bidirectional near-dup edge list, persisted per (session, corpus
-    * dir) — the session is part of the key so a frame bound to a
-    * stopped/replaced SparkSession is never served to a new one (see
-    * q64).
+  /** Bidirectional near-dup edge list, persisted and memoized per
+    * (session, corpus dir) (lifecycle: [[graft.Memo]]; see q64).
     */
   private val edgeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), org.apache.spark.sql.DataFrame]
+    new Memo[Unit, org.apache.spark.sql.DataFrame](_.unpersist())
 
   /** Resolved cluster labels per (session, corpus dir) — like the edge
     * graph and the IVF index, cluster resolution is computed once per
     * corpus snapshot and every consumer (q64, q65, reporting) reuses it.
     */
-  private val clusterCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), org.apache.spark.sql.DataFrame]
+  private val clusterCache = new Memo[Unit, org.apache.spark.sql.DataFrame](
+    ckptRdd(_).foreach(_.unpersist(false)))
 
   /** The block-manager RDD behind a localCheckpoint'ed frame (the thing
     * `Dataset.unpersist` does NOT release — checkpoint storage is
@@ -44,25 +42,6 @@ object Curation {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }
 
-  /** Drop cache entries whose SparkSession has stopped — the frames'
-    * blocks died with the context, so the entries only pin dead session
-    * objects (TrainingData's sweep, applied to this module's caches; a
-    * long-lived app creating many sessions over the same corpus would
-    * otherwise accumulate them without bound). Called on every cache
-    * access, like [[TrainingData.sweepStoppedSessions]].
-    */
-  private[operators] def sweepStoppedSessions(): Unit = {
-    def dead(s: SparkSession) = s.sparkContext.isStopped
-    edgeCache.keys.filter(k => dead(k._1)).foreach { k =>
-      edgeCache.remove(k).foreach(df => scala.util.Try(df.unpersist()))
-    }
-    clusterCache.keys.filter(k => dead(k._1)).foreach { k =>
-      clusterCache.remove(k).foreach(df =>
-        scala.util.Try(ckptRdd(df).foreach(_.unpersist(false))))
-    }
-    bloomCache.keys.filter(k => dead(k._1)).foreach(bloomCache.remove)
-  }
-
   /** Release everything this module holds for a corpus dir — the
     * compaction hook: after the corpus changes (docs merged, deletes
     * applied), cached edge graphs and cluster labels are stale AND pinned
@@ -71,19 +50,8 @@ object Curation {
     * [[dedupClusters]] call re-resolves from the new corpus.
     */
   def invalidate(d: String): Unit = {
-    // dir-scoped eviction across ALL sessions (compaction staled every
-    // session's entry); unpersist tolerates already-stopped sessions
-    edgeCache.keys.filter(_._2 == d).foreach { key =>
-      edgeCache.remove(key).foreach(df => scala.util.Try(df.unpersist()))
-    }
-    clusterCache.keys.filter(_._2 == d).foreach { key =>
-      clusterCache.remove(key).foreach(df =>
-        scala.util.Try(ckptRdd(df).foreach(_.unpersist(false))))
-    }
-    bloomCache.keys.filter(_._2 == d).foreach(bloomCache.remove)
     DerivedCache.invalidate(d) // persisted cluster labels / bigram NLL
-    TrainingData.invalidate(d) // row-count stat + IVF indexes of the same corpus
-    Prep.invalidate(d)         // BPE merges / token vocab / quality model
+    appendRefresh(d)           // every module's session memos
   }
 
   /** The APPEND hook — the nightly-crawl twin of [[invalidate]]: evict
@@ -96,15 +64,11 @@ object Curation {
     * the artifacts would otherwise pay a full rebuild anyway.
     */
   def appendRefresh(d: String): Unit = {
-    edgeCache.keys.filter(_._2 == d).foreach { key =>
-      edgeCache.remove(key).foreach(df => scala.util.Try(df.unpersist()))
-    }
-    clusterCache.keys.filter(_._2 == d).foreach { key =>
-      clusterCache.remove(key).foreach(df =>
-        scala.util.Try(ckptRdd(df).foreach(_.unpersist(false))))
-    }
-    bloomCache.keys.filter(_._2 == d).foreach(bloomCache.remove)
-    TrainingData.invalidate(d) // session memos only — artifacts stay
+    // across ALL sessions that touched the corpus
+    edgeCache.invalidate(d)
+    clusterCache.invalidate(d)
+    bloomCache.invalidate(d)
+    TrainingData.invalidate(d) // row-count stat + IVF/PQ indexes
     Prep.invalidate(d)         // BPE merges / token vocab / quality model
   }
 
@@ -123,7 +87,6 @@ object Curation {
     * the shape that runs on a 100 TB edge list.
     */
   def dedupClusters(s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    sweepStoppedSessions()
     // two-level serve: session memo -> persisted artifact -> resolve.
     // The resolved labels are a DerivedCache artifact because they are
     // the expensive head of the q64/q65/q93/q122 chain (LSH pair
@@ -131,19 +94,19 @@ object Curation {
     // a nightly pipeline run IS one — reads the (doc_id, cluster_id,
     // keep) parquet instead of re-resolving, the same way it reads the
     // band/IVF/PQ/LM indexes. Deterministic, so cached == rebuilt.
-    clusterCache.getOrElseUpdate((s, d),
+    clusterCache(s, d)(
       DerivedCache.orBuildIncremental(s, d, "cluster_labels_v1")({
         // the near-dup pair graph is a build-once artifact per corpus
         // snapshot (like the IVF index): generation runs once per session
         // and clustering/reporting reuse it — and the edge list is read
         // every propagation round, so it must be materialized regardless
-        val edges = edgeCache.getOrElseUpdate((s, d), {
+        val edges = edgeCache(s, d) {
           val pairs = TrainingData.jaccardPairs(s, d).select("id_a", "id_b")
           pairs
             .unionByName(
               pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
             .persist()
-        })
+        }
         val labels = connectedComponents(edges)
         labels.select(col("doc_id"), col("label").as("cluster_id"),
                       (col("doc_id") === col("label")).cast("long").as("keep"))
@@ -1010,7 +973,7 @@ object Curation {
     * `xxhash64(text)` of every corpus doc, built in ONE distributed
     * aggregate pass (native `BloomFilterAggregate`, per-partition
     * sketches merging map-side) and collected once — a ~1 MB broadcast
-    * artifact like the IVF centroids, cached per (session, corpus
+    * artifact like the IVF centroids, memoized per (session, corpus
     * snapshot) and refreshed by compaction via [[invalidate]]. Never
     * rebuilt per micro-batch.
     *
@@ -1023,13 +986,11 @@ object Curation {
     * bound on corpora beyond ~1M docs. Explicit sizes still win when
     * passed.
     */
-  private val bloomCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Array[Byte]]
+  private val bloomCache = new Memo[Unit, Array[Byte]]()
   def corpusBloom(s: SparkSession, d: String,
                   expectedItems: Long = 0L,
-                  numBits: Long = 0L): Array[Byte] = {
-    sweepStoppedSessions()
-    bloomCache.getOrElseUpdate((s, d), {
+                  numBits: Long = 0L): Array[Byte] =
+    bloomCache(s, d) {
       val items =
         if (expectedItems > 0L) expectedItems
         else math.max(TrainingData.corpusCount(s, d) * 2, 1L << 16)
@@ -1038,8 +999,7 @@ object Curation {
         .agg(graft.functions.Bloom
           .bloomAgg(xxhash64(col("text")), items, bits).as("bf"))
         .head().getAs[Array[Byte]](0)
-    })
-  }
+    }
 
   /** Crawl-frontier prune against the ACCUMULATED corpus (the band index
     * catches near-dups; this catches exact re-crawls): incoming docs

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.{Listing, Memo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Disk-backed cache of DERIVED corpus artifacts — the catalog role a
@@ -19,8 +20,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the repo's standard index lifecycle — build into `.staging`, write
   * the `_fingerprint` sidecar BEFORE the atomic rename, so a concurrent
   * reader never observes a half-written artifact, and a crash mid-build
-  * leaves the previous version serving. The fingerprint is the sorted
-  * (name, length, mtime) listing of the corpus dir's data files: any
+  * leaves the previous version serving. The fingerprint is the
+  * [[graft.Listing]] token of the corpus dir's data files: any
   * compaction / regeneration of the corpus invalidates every artifact
   * derived from it at the next read, with zero coordination.
   *
@@ -43,57 +44,27 @@ object DerivedCache {
     "SPARK_GRAFT_CACHE_DIR",
     sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft_derived")
 
-  private def md5hex(v: String): String = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-    d.digest(v.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
-
   private def corpusKey(d: String): String =
-    md5hex(new java.io.File(d).getAbsolutePath)
+    Listing.md5hex(new java.io.File(d).getAbsolutePath)
 
-  /** Sorted (name, length, mtime) of the corpus dir's visible files —
-    * one cheap filesystem listing; directories (partitioned tables)
-    * recurse one level so compaction output is covered too.
+  /** The READ side of a landed artifact, memoized per session on the
+    * artifact dir and its freshness token (lifecycle: [[graft.Memo]]):
+    * `s.read.parquet` re-infers the schema from parquet footers and
+    * rebuilds the file index ON THE DRIVER at every call — ~30-100 ms
+    * per artifact per invocation, paid by every cache-served registry
+    * query. The DataFrame (resolved relation + file index) is PLANNING
+    * METADATA only — execution still reads the parquet bytes each run.
+    * Any rebuild of the artifact evicts the dir's entries (see
+    * [[serveWith]]): a same-token rebuild would otherwise serve a file
+    * index of deleted part files.
     */
-  private def fingerprint(s: SparkSession, d: String): String = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(d)
-    val fs = p.getFileSystem(conf)
-    def entries(dir: org.apache.hadoop.fs.Path, depth: Int)
-        : Seq[String] =
-      fs.listStatus(dir).toSeq.filterNot(_.getPath.getName.startsWith("_"))
-        .flatMap { st =>
-          if (st.isDirectory && depth > 0) entries(st.getPath, depth - 1)
-          else Seq(s"${st.getPath.getName}|${st.getLen}|${st.getModificationTime}")
-        }
-    md5hex(entries(p, 2).sorted.mkString("\n"))
-  }
-
-  /** Session-scoped memo of the READ side of a landed artifact (r21,
-    * guide §5 driver work / §6 file-listing caching): `s.read.parquet`
-    * re-infers the schema from parquet footers and rebuilds the file
-    * index ON THE DRIVER at every call — ~30-100 ms per artifact per
-    * invocation, paid by every cache-served registry query. The
-    * DataFrame (resolved relation + file index) is PLANNING METADATA
-    * only — execution still reads the parquet bytes each run — and the
-    * key carries the artifact's freshness TOKEN, so a rebuild under a
-    * new token mints a new entry and a stale one is never served.
-    * [[invalidate]] additionally drops every entry under the corpus
-    * (covering out-of-band deletion + same-token rebuild). Same class
-    * and lifecycle as the spread()/corpusCount plan-statistic caches:
-    * session-keyed, swept on session stop.
-    */
-  private val readCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-  private val modelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), org.apache.spark.ml.PipelineModel]
+  private[graft] val readCache = new Memo[String, DataFrame]()
+  private val modelCache =
+    new Memo[String, org.apache.spark.ml.PipelineModel]()
 
   private def readCached(s: SparkSession, dir: String,
-                         token: String): DataFrame = {
-    readCache.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(readCache.remove)
-    readCache.getOrElseUpdate((s, dir, token), s.read.parquet(dir))
-  }
+                         token: String): DataFrame =
+    readCache.latest(s, dir, token)(s.read.parquet(dir))
 
   /** Serve `<artifact>` for corpus `d`: the persisted parquet if its
     * fingerprint matches the corpus as it stands, else run `build`,
@@ -104,7 +75,7 @@ object DerivedCache {
     */
   def orBuild(s: SparkSession, d: String, artifact: String)
              (build: => DataFrame): DataFrame = {
-    val fp = fingerprint(s, d)
+    val fp = Listing.token(s, d)
     val dir = serveWith(s, s"$root/${corpusKey(d)}/$artifact", fp, Map.empty)(
       staging => build.write.mode("overwrite").parquet(staging))
     readCached(s, dir, fp)
@@ -119,46 +90,11 @@ object DerivedCache {
   def orBuildModel(s: SparkSession, d: String, artifact: String)
                   (build: => org.apache.spark.ml.PipelineModel)
       : org.apache.spark.ml.PipelineModel = {
-    val fp = fingerprint(s, d)
+    val fp = Listing.token(s, d)
     val dir = serveWith(s, s"$root/${corpusKey(d)}/$artifact", fp, Map.empty)(
       staging => build.write.overwrite().save(staging + "/model"))
-    modelCache.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(modelCache.remove)
-    modelCache.getOrElseUpdate((s, dir, fp),
+    modelCache.latest(s, dir, fp)(
       org.apache.spark.ml.PipelineModel.load(dir + "/model"))
-  }
-
-  /** One manifest line per data file under `tablePath` — relative
-    * path, byte length, mtime — paired with the file's absolute path.
-    * The append-awareness primitive: a corpus table that changed by
-    * PURE FILE ADDITION (the nightly-crawl shape — new part files land,
-    * old ones are immutable) has its old manifest as a strict subset of
-    * the new one, and the difference IS the appended slice.
-    */
-  private def manifestLines(s: SparkSession, tablePath: String)
-      : Seq[(String, String)] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return Nil
-    val rootUri = fs.makeQualified(p).toUri
-    def entries(dir: org.apache.hadoop.fs.Path, depth: Int)
-        : Seq[(String, String)] =
-      fs.listStatus(dir).toSeq
-        .filterNot(st => st.getPath.getName.startsWith("_") ||
-                         st.getPath.getName.startsWith("."))
-        .flatMap { st =>
-          if (st.isDirectory && depth > 0) entries(st.getPath, depth - 1)
-          else {
-            val q = fs.makeQualified(st.getPath)
-            val rel = rootUri.relativize(q.toUri).getPath
-            Seq((s"$rel|${st.getLen}|${st.getModificationTime}", q.toString))
-          }
-        }
-    val st = fs.getFileStatus(p)
-    if (st.isDirectory) entries(p, 2).sortBy(_._1)
-    else Seq((s"${p.getName}|${st.getLen}|${st.getModificationTime}",
-              fs.makeQualified(p).toString))
   }
 
   private def readSidecar(fs: org.apache.hadoop.fs.FileSystem,
@@ -200,9 +136,12 @@ object DerivedCache {
     // table "." keys the manifest on the corpus dir ITSELF — the
     // whole-dir corpora (a WARC crawl directory) whose appended files
     // land at the top level rather than under a named table
-    val cur = manifestLines(s, if (table == ".") d else s"$d/$table")
+    // the manifest is the table's Listing: a pure file addition leaves
+    // the old manifest a strict subset of the new one, and the
+    // difference IS the appended slice
+    val cur = Listing.files(s, if (table == ".") d else s"$d/$table")
     val curText = cur.map(_._1).mkString("\n")
-    val token = md5hex(curText)
+    val token = Listing.token(cur.map(_._1))
     val conf = s.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(dirStr).getFileSystem(conf)
     // the `_table` sidecar names the manifest's table so [[status]] can
@@ -241,8 +180,7 @@ object DerivedCache {
     */
   def orBuildFromDir(s: SparkSession, d: String, artifact: String,
                      sourceDir: String)(build: => DataFrame): DataFrame = {
-    val token = md5hex(
-      manifestLines(s, sourceDir).map(_._1).mkString("\n"))
+    val token = Listing.token(s, sourceDir)
     val dir = serveWith(s, s"$root/${corpusKey(d)}/$artifact", token,
                         Map("_source" -> sourceDir))(
       staging => build.write.mode("overwrite").parquet(staging))
@@ -270,7 +208,7 @@ object DerivedCache {
           finally in.close()
         stored == fp
       }
-    if (!fresh) {
+    if (!fresh) try {
       // reap siblings stranded by CRASHED earlier builds — writer-unique
       // names mean a killed JVM leaks its '.staging-xxxx' (and a failed
       // swap its '.old-xxxx') forever, and retries add more. A LIVE
@@ -352,6 +290,12 @@ object DerivedCache {
         fs.delete(staging, true)
         fs.delete(aside, true)
       }
+    } finally {
+      // whatever landed — our build, or a concurrent winner's — every
+      // session's memoized plan of the dir may index replaced files,
+      // even when the token is unchanged
+      readCache.invalidate(dirStr)
+      modelCache.invalidate(dirStr)
     }
     dirStr
   }
@@ -426,10 +370,10 @@ object DerivedCache {
     val fs = p.getFileSystem(conf)
     if (fs.exists(p)) { fs.delete(p, true); () }
     // drop memoized read plans under this corpus — they may reference
-    // files the delete just removed (same-token rebuilds included)
+    // files the delete just removed
     val prefix = s"$root/${corpusKey(d)}/"
-    readCache.keys.filter(_._2.startsWith(prefix)).foreach(readCache.remove)
-    modelCache.keys.filter(_._2.startsWith(prefix)).foreach(modelCache.remove)
+    readCache.invalidateWhere((dir, _) => dir.startsWith(prefix))
+    modelCache.invalidateWhere((dir, _) => dir.startsWith(prefix))
   }
 
   /** Operability read — the "are my artifacts fresh" table an operator
@@ -455,14 +399,13 @@ object DerivedCache {
     val conf = s.sparkContext.hadoopConfiguration
     val dir = new org.apache.hadoop.fs.Path(s"$root/${corpusKey(d)}")
     val fs = dir.getFileSystem(conf)
-    lazy val corpusFp = fingerprint(s, d)
+    lazy val corpusFp = Listing.token(s, d)
     // manifest digests resolve lazily per TABLE an artifact names —
     // one listing per distinct table across the whole status read
     val manifestFps = scala.collection.mutable.Map.empty[String, String]
     def manifestFp(table: String): String =
-      manifestFps.getOrElseUpdate(table, md5hex(
-        manifestLines(s, if (table == ".") d else s"$d/$table")
-          .map(_._1).mkString("\n")))
+      manifestFps.getOrElseUpdate(table,
+        Listing.token(s, if (table == ".") d else s"$d/$table"))
     val rows =
       if (!fs.exists(dir)) Seq.empty[(String, Boolean, Long, Long)]
       else fs.listStatus(dir).toSeq
@@ -492,8 +435,7 @@ object DerivedCache {
                 .map(_.trim).filter(_.nonEmpty)
                 .getOrElse("documents.parquet"))
             else sourceSidecar match {
-              case Some(src) => md5hex(
-                manifestLines(s, src).map(_._1).mkString("\n"))
+              case Some(src) => Listing.token(s, src)
               case None => corpusFp
             }
           def files(p: org.apache.hadoop.fs.Path)

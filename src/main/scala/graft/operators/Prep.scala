@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Memo, Q, Tables}
 import graft.functions.Compress.deflate_ratio
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1365,12 +1365,11 @@ object Prep {
     * model broadcasts whole. Deterministic given fixed input
     * partitioning (LBFGS with ordered tree aggregation).
     */
-  /** Fitted quality models cached per (session, corpus) — train once,
+  /** Fitted quality models memoized per (session, corpus) — train once,
     * serve everywhere (the bpeCache/index-cache convention); the model
     * itself is a few hundred KB of coefficients.
     */
-  private val qcCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), org.apache.spark.ml.PipelineModel]
+  private val qcCache = new Memo[Unit, org.apache.spark.ml.PipelineModel]()
 
   /** Evict this module's session memos for a corpus dir — the Prep
     * half of the corpus-change hooks (Curation.invalidate for
@@ -1380,18 +1379,17 @@ object Prep {
     * hit would silently mix old-corpus state into new-corpus queries.
     */
   def invalidate(d: String): Unit = {
-    bpeCache.keys.filter(_._2 == d).foreach(bpeCache.remove)
-    vocabCache.keys.filter(_._2 == d).foreach(vocabCache.remove)
-    qcCache.keys.filter(_._2 == d).foreach(qcCache.remove)
+    bpeCache.invalidate(d)
+    vocabCache.invalidate(d)
+    qcCache.invalidate(d)
   }
 
   def qualityModelCached(s: SparkSession, d: String): org.apache.spark.ml.PipelineModel = {
-    qcCache.keys.filter(_._1.sparkContext.isStopped).foreach(qcCache.remove)
     // session memo -> persisted model -> LBFGS fit (deterministic given
     // the fixed input partitioning, so served == refit): the nightly
     // fresh session loads coefficients instead of re-paying 20
     // treeAggregate passes
-    qcCache.getOrElseUpdate((s, d),
+    qcCache(s, d)(
       DerivedCache.orBuildModel(s, d, "quality_model_v1")(
         trainQualityModel(spread(docs(s, d)))))
   }
@@ -1881,20 +1879,17 @@ object Prep {
   }
 
   /** Merge lists are tiny driver values (K rows) but cost K distributed
-    * passes to learn — cached per (session, corpus) like the index
-    * caches (TrainingData.scala:101 convention, incl. the dead-session
-    * sweep) so q131 (the list) and q133 (its application) train once.
+    * passes to learn — memoized per (session, corpus, byteLevel) like
+    * the index caches ([[graft.Memo]]) so q131 (the list) and q133 (its
+    * application) train once.
     */
-  private val bpeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Boolean), Seq[(Long, String, String, Long)]]
+  private val bpeCache = new Memo[Boolean, Seq[(Long, String, String, Long)]]()
 
   def bpeMergesCached(s: SparkSession, d: String,
                       byteLevel: Boolean = false)
-      : Seq[(Long, String, String, Long)] = {
-    bpeCache.keys.filter(_._1.sparkContext.isStopped).foreach(bpeCache.remove)
-    bpeCache.getOrElseUpdate((s, d, byteLevel),
+      : Seq[(Long, String, String, Long)] =
+    bpeCache(s, d, byteLevel)(
       bpeMergeList(spread(docs(s, d)), BpeK, byteLevel = byteLevel))
-  }
 
   /** q133's body: tokenize the corpus with a LEARNED merge list — the
     * apply side of [[bpeMerges]], closing the tokenizer loop (learn on
@@ -1939,16 +1934,14 @@ object Prep {
     * two different merge paths both produce keeps its smallest id. The
     * map is alphabet-bounded (corpus character set + K merges — hundreds
     * of entries, not vocabulary-sized), so it is the one BPE artifact
-    * that legitimately travels as a literal/broadcast; cached per
-    * (session, corpus) like the merge list.
+    * that legitimately travels as a literal/broadcast; memoized like
+    * the merge list.
     */
-  private val vocabCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Boolean), Map[String, Long]]
+  private val vocabCache = new Memo[Boolean, Map[String, Long]]()
 
   def tokenVocab(s: SparkSession, d: String,
-                 byteLevel: Boolean = false): Map[String, Long] = {
-    vocabCache.keys.filter(_._1.sparkContext.isStopped).foreach(vocabCache.remove)
-    vocabCache.getOrElseUpdate((s, d, byteLevel), {
+                 byteLevel: Boolean = false): Map[String, Long] =
+    vocabCache(s, d, byteLevel) {
       val merges = bpeMergesCached(s, d, byteLevel)
       // byte mode's alphabet is the full 256-symbol hex set REGARDLESS
       // of the corpus — ids 1..256 are corpus-independent, which is the
@@ -1970,8 +1963,7 @@ object Prep {
         .map { case (c, i) => c -> (i + 1).toLong } ++
         merges.map { case (step, l, r, _) => (l + r) -> (n + step) }
       pairs.groupBy(_._1).map { case (sym, ids) => sym -> ids.map(_._2).min }
-    })
-  }
+    }
 
   /** Every distinct corpus word mapped to its subword-ID array under the
     * learned merges: K chained codegen folds over the DISTINCT-WORD table

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Memo, Q, Tables}
 import graft.functions.TextHashes.{hamming64, minhash_sig, simhash64, srp_sig, word_shingles}
 import graft.functions.VectorMath.cosine_sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -53,7 +53,7 @@ object TrainingData {
   private[operators] def spread(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df // micro-batch planning sizes stream tasks
     val target = df.sparkSession.sparkContext.defaultParallelism
-    spreadCache.keys.filter(_._1.sparkContext.isStopped)
+    spreadCache.keys.filter(k => Memo.stopped(k._1))
       .foreach(spreadCache.remove)
     val key = (df.sparkSession, df.queryExecution.analyzed.canonicalized)
     val n = spreadCache.getOrElseUpdate(key, df.rdd.getNumPartitions)
@@ -103,42 +103,13 @@ object TrainingData {
   /** The verified near-dup pair set is a build-once artifact per corpus
     * snapshot — q38 reports it, q64 clusters it, q95 cross-checks it
     * against splits; a production pipeline computes it once per
-    * compaction, not once per consumer. Cached (persisted) per
-    * (session, dir) — the session is part of the key so a cached frame
-    * bound to a stopped/replaced SparkSession is never served to a new
-    * one — evicted by [[invalidate]]; [[jaccardPairsPlan]] is the
-    * uncached plan for audits.
+    * compaction, not once per consumer. Persisted and memoized per
+    * (session, dir) (lifecycle: [[graft.Memo]]); [[jaccardPairsPlan]] is
+    * the uncached plan for audits.
     */
-  private val pairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  def jaccardPairs(s: SparkSession, d: String): DataFrame = {
-    sweepStoppedSessions()
-    pairsCache.getOrElseUpdate((s, d), jaccardPairsPlan(s, d).persist())
-  }
-
-  /** Drop cache entries whose owning SparkSession's context has stopped —
-    * without this, a long-lived app creating sessions over the same corpus
-    * accumulates strongly-referenced dead sessions and their persisted
-    * frames without bound. Called opportunistically on every cache access
-    * (a TrieMap scan over a handful of keys); [[invalidate]] remains the
-    * corpus-change eviction path.
-    */
-  private[operators] def sweepStoppedSessions(): Unit = {
-    def dead(s: SparkSession) = s.sparkContext.isStopped
-    statsCache.keys.filter(k => dead(k._1)).foreach(statsCache.remove)
-    vocabCache.keys.filter(k => dead(k._1)).foreach(vocabCache.remove)
-    pairsCache.keys.filter(k => dead(k._1)).foreach { k =>
-      // the frame's blocks died with the context; dropping the entry is
-      // the point, unpersist is best-effort bookkeeping
-      pairsCache.remove(k).foreach(df => scala.util.Try(df.unpersist()))
-    }
-    ivfCache.keys.filter(k => dead(k._1)).foreach { k =>
-      ivfCache.remove(k).foreach { case (_, a) => scala.util.Try(a.unpersist()) }
-    }
-    pqCache.keys.filter(k => dead(k._1)).foreach { k =>
-      pqCache.remove(k).foreach { case (_, a) => scala.util.Try(a.unpersist()) }
-    }
-  }
+  private val pairsCache = new Memo[Unit, DataFrame](_.unpersist())
+  def jaccardPairs(s: SparkSession, d: String): DataFrame =
+    pairsCache(s, d)(jaccardPairsPlan(s, d).persist())
 
   def jaccardPairsPlan(s: SparkSession, d: String): DataFrame = {
     val base = spread(docs(s, d)).select(
@@ -279,33 +250,28 @@ object TrainingData {
       .filter(col("cos") >= thr)
   }
 
-  /** Corpus row count, cached per dir. One metadata-cheap pass (parquet
-    * row-group counts; no data pages) amortized across every adaptive
-    * operator in the session. This is a PLAN-SHAPING statistic (band
-    * geometry below), not a value a query consumes in-plan — the q55
-    * anti-pattern of a driver-side count feeding a literal does not apply:
-    * at production scale this number comes from catalog/table metadata.
+  /** Corpus row count, memoized per (session, dir) ([[graft.Memo]]).
+    * One metadata-cheap pass (parquet row-group counts; no data pages)
+    * amortized across every adaptive operator in the session. This is a
+    * PLAN-SHAPING statistic (band geometry below), not a value a query
+    * consumes in-plan — the q55 anti-pattern of a driver-side count
+    * feeding a literal does not apply: at production scale this number
+    * comes from catalog/table metadata.
     */
-  private val statsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-  def corpusCount(s: SparkSession, d: String): Long = {
-    sweepStoppedSessions()
-    statsCache.getOrElseUpdate((s, d), docs(s, d).count())
-  }
+  private val statsCache = new Memo[Unit, Long]()
+  def corpusCount(s: SparkSession, d: String): Long =
+    statsCache(s, d)(docs(s, d).count())
 
-  /** Corpus vocabulary size (distinct whitespace tokens), cached per
-    * (session, dir) like [[corpusCount]] — another plan-shaping
-    * statistic (it sizes q96's exact-regime sketch); at production
-    * scale it comes from table metadata / an NDV sketch, not a scan.
+  /** Corpus vocabulary size (distinct whitespace tokens), memoized like
+    * [[corpusCount]] — another plan-shaping statistic (it sizes q96's
+    * exact-regime sketch); at production scale it comes from table
+    * metadata / an NDV sketch, not a scan.
     */
-  private val vocabCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-  def vocabSize(s: SparkSession, d: String): Long = {
-    sweepStoppedSessions()
-    vocabCache.getOrElseUpdate((s, d),
+  private val vocabCache = new Memo[Unit, Long]()
+  def vocabSize(s: SparkSession, d: String): Long =
+    vocabCache(s, d)(
       docs(s, d).select(explode(tokens(col("text"))).as("term"))
         .distinct().count())
-  }
 
   /** PQ geometry: 64-dim vectors split into 16 subspaces of 4 dims, 16
     * centroids per subspace (4-bit codes, 16 codes/vector = 8 bytes vs
@@ -318,12 +284,12 @@ object TrainingData {
   val PqK = 16
 
   /** Build-once PQ index: (flattened per-subspace codebooks, encoded
-    * corpus), cached per (session, dir) like the IVF structure. The 8
+    * corpus), memoized per (session, dir) like the IVF structure. The 8
     * per-subspace KMeans fits + the encode pass run on the FIRST call;
     * every later query batch reuses them (pqFits observes the skip).
     */
   private val pqCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (Array[Array[Double]], DataFrame)]
+    new Memo[Unit, (Array[Array[Double]], DataFrame)](_._2.unpersist())
   val pqFits = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** L2-normalized double vector: after normalization the L2 order equals
@@ -460,9 +426,8 @@ object TrainingData {
     * and only then an ad-hoc in-session fit. Same precedence as
     * [[ivfIndex]].
     */
-  def pqIndex(s: SparkSession, d: String): (Array[Array[Double]], DataFrame) = {
-    sweepStoppedSessions()
-    pqCache.getOrElseUpdate((s, d), {
+  def pqIndex(s: SparkSession, d: String): (Array[Array[Double]], DataFrame) =
+    pqCache(s, d) {
       pqIndexLocations.get(d) match {
         case Some(dir) =>
           val (cb, coded) = loadPqIndex(s, dir)
@@ -471,8 +436,7 @@ object TrainingData {
           val (cb, coded) = fitPq(s, d)
           (cb, coded.persist())
       }
-    })
-  }
+    }
 
   /** Where the persisted PQ index for a corpus dir lives (the catalog's
     * job in production, a JVM-wide registry here — see
@@ -513,9 +477,7 @@ object TrainingData {
       throw new java.io.IOException(s"pq-index swap failed: $staging -> $target")
     fs.delete(aside, true)
     // in-memory entries for d now duplicate the persisted truth
-    pqCache.keys.filter(_._2 == d).foreach { key =>
-      pqCache.remove(key).foreach { case (_, a) => scala.util.Try(a.unpersist()) }
-    }
+    pqCache.invalidate(d)
     pqIndexLocations.put(d, indexDir)
   }
 
@@ -564,15 +526,15 @@ object TrainingData {
     else if (nDocs <= 2000000L) (16, 6)
     else (12, 8)
 
-  /** Build-once IVF index: (centroids, persisted cell assignment), cached
-    * per (corpus dir, k). The KMeans fit + corpus assignment pass run on
+  /** Build-once IVF index: (centroids, persisted cell assignment),
+    * memoized per (session, corpus dir, k). The KMeans fit + corpus assignment pass run on
     * the FIRST call in a session; every later query batch reuses them —
     * the production shape, where the index amortizes across batches
     * instead of refitting per query (IvfIndexSpec asserts the skip).
     * Centroids to the driver are k x dims doubles — bounded.
     */
   private val ivfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), (Seq[(Int, Array[Double])], DataFrame)]
+    new Memo[Int, (Seq[(Int, Array[Double])], DataFrame)](_._2.unpersist())
 
   /** Number of KMeans fits actually executed (test observability). */
   val ivfFits = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -586,25 +548,13 @@ object TrainingData {
     * against the new corpus.
     */
   def invalidate(d: String): Unit = {
-    // dir-scoped eviction across ALL sessions that touched the corpus —
-    // compaction changes the data, so every session's entry is stale
-    statsCache.keys.filter(_._2 == d).foreach(statsCache.remove)
-    vocabCache.keys.filter(_._2 == d).foreach(vocabCache.remove)
-    pairsCache.keys.filter(_._2 == d).foreach { key =>
-      // unpersist throws on a frame whose session already stopped; the
-      // entry is garbage either way, so dropping it is the whole point
-      pairsCache.remove(key).foreach(df => scala.util.Try(df.unpersist()))
-    }
-    ivfCache.keys.filter(_._2 == d).foreach { key =>
-      ivfCache.remove(key).foreach { case (_, assigned) =>
-        scala.util.Try(assigned.unpersist())
-      }
-    }
-    pqCache.keys.filter(_._2 == d).foreach { key =>
-      pqCache.remove(key).foreach { case (_, coded) =>
-        scala.util.Try(coded.unpersist())
-      }
-    }
+    // across ALL sessions that touched the corpus — compaction changes
+    // the data, so every session's entry is stale
+    statsCache.invalidate(d)
+    vocabCache.invalidate(d)
+    pairsCache.invalidate(d)
+    ivfCache.invalidate(d)
+    pqCache.invalidate(d)
     // a persisted IVF/PQ index of the old corpus must not be silently
     // served after the data changed — deregister; [[refreshIvfIndex]] /
     // [[refreshPqIndex]] re-register
@@ -646,9 +596,8 @@ object TrainingData {
     * zero KMeans fits, the amortization a production index exists for),
     * and only then an ad-hoc in-session fit.
     */
-  def ivfIndex(s: SparkSession, d: String, k: Int): (Seq[(Int, Array[Double])], DataFrame) = {
-    sweepStoppedSessions()
-    ivfCache.getOrElseUpdate((s, d, k), {
+  def ivfIndex(s: SparkSession, d: String, k: Int): (Seq[(Int, Array[Double])], DataFrame) =
+    ivfCache(s, d, k) {
       ivfIndexLocations.get((d, k)) match {
         case Some(dir) =>
           val (centers, assigned) = loadIvfIndex(s, dir)
@@ -657,8 +606,7 @@ object TrainingData {
           val (centers, assigned) = fitIvf(s, d, k)
           (centers, assigned.persist())
       }
-    })
-  }
+    }
 
   /** Persist the IVF index for (corpus, k): cell assignment as parquet +
     * centroids in an underscore-prefixed text sidecar (parquet readers
@@ -691,9 +639,7 @@ object TrainingData {
     fs.delete(aside, true)
     // in-memory entries for (d, k) now duplicate the persisted truth;
     // drop them so every session converges on the index on next access
-    ivfCache.keys.filter(key => key._2 == d && key._3 == k).foreach { key =>
-      ivfCache.remove(key).foreach { case (_, a) => scala.util.Try(a.unpersist()) }
-    }
+    ivfCache.invalidateWhere((dir, kk) => dir == d && kk == k)
     ivfIndexLocations.put((d, k), indexDir)
   }
 

@@ -83,4 +83,23 @@ class TablesSpec extends AnyFunSuite with SparkSpec {
     val mism = df.filter(unix_micros(col("ts")) * 1000L =!= col("ts_ns")).count()
     assert(mism == 0L)
   }
+
+  test("a rewritten table supersedes its memoized scan") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("tables-spec-rewrite").toString
+    (1 to 3).foreach { n =>
+      (1 to n).map(i => (i.toLong, s"doc $i")).toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      assert(Tables.documents(spark, dir).count() == n.toLong)
+    }
+    assert(Tables.scanCache.size(s"$dir/documents.parquet") == 1)
+  }
+
+  test("a missing table path raises Spark's PATH_NOT_FOUND naming the path") {
+    val dir = Files.createTempDirectory("tables-spec-missing").toString + "/absent"
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Tables.documents(spark, dir))
+    assert(e.getCondition == "PATH_NOT_FOUND")
+    assert(e.getMessage.contains(s"$dir/documents.parquet"))
+  }
 }

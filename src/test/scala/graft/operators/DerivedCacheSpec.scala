@@ -35,6 +35,41 @@ class DerivedCacheSpec extends AnyFunSuite with SparkSpec {
     assert(first == second)
   }
 
+  test("an artifact deleted out of band rebuilds and serves its rows, not a stale plan") {
+    val d = freshCorpus()
+    val art = "spec_lost_v1"
+    var builds = 0
+    def serve() = DerivedCache.orBuild(spark, d, art) {
+      builds += 1
+      spark.read.parquet(d + "/documents.parquet")
+        .selectExpr("id", "upper(w) AS w")
+    }
+    val first = serve().collect().map(_.toSeq.toList).toSet
+    // no invalidate(), corpus unchanged: the rebuild lands under the
+    // SAME token, with new part-file names
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(DerivedCache.artifactDir(d, art)))
+    val second = serve().collect().map(_.toSeq.toList).toSet
+    assert(builds == 2)
+    assert(first == second)
+  }
+
+  test("corpus appends supersede the artifact's read memo entry") {
+    import spark.implicits._
+    val d = freshCorpus()
+    val art = "spec_grow_v1"
+    def serve() = DerivedCache.orBuild(spark, d, art)(
+      spark.read.parquet(d + "/documents.parquet"))
+    assert(serve().count() == 3L)
+    (4L to 6L).foreach { i =>
+      Seq((i, s"w$i")).toDF("id", "w")
+        .write.mode("append").parquet(d + "/documents.parquet")
+      assert(serve().count() == i)
+    }
+    assert(DerivedCache.readCache.size(DerivedCache.artifactDir(d, art)) == 1,
+           "superseded tokens must not accumulate in the read memo")
+  }
+
   test("orBuildFromDir: second-order artifact keys on the SOURCE artifact, not the corpus") {
     import spark.implicits._
     val d = freshCorpus()
