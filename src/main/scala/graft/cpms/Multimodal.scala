@@ -823,42 +823,25 @@ object Multimodal {
     * the ENTIRE static corpus inside its own plan — the band-index
     * lesson from text dedup, TrainingData.buildBandIndex). Rows:
     * (matched_id, dhash, chunk, ckey); band geometry travels in a
-    * `_dhash_geometry` sidecar written BEFORE the staging -> rename swap
-    * (the shared index lifecycle), so probes always band with the
-    * geometry the index was built with.
+    * `_dhash_geometry` sidecar landed with the table
+    * ([[graft.Landing.swap]]), so probes always band with the geometry
+    * the index was built with.
     */
   def buildDhashIndex(s: org.apache.spark.sql.SparkSession, assets: DataFrame,
-                      indexDir: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(indexDir + ".staging")
-    fs.delete(staging, true)
-    dhashBands(decode(assets), "image")
-      .select(col("asset_id").as("matched_id"), col("dhash"),
-              col("chunk"), col("ckey"))
-      .repartition(col("chunk"), col("ckey"))
-      .write.mode("overwrite").parquet(staging.toString)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(staging, "_dhash_geometry"), true)
-    try out.write(s"$DhashChunks $DhashChunkBits".getBytes("UTF-8"))
-    finally out.close()
-    val aside = new org.apache.hadoop.fs.Path(indexDir + ".old")
-    fs.delete(aside, true)
-    if (fs.exists(target) && !fs.rename(target, aside))
-      throw new java.io.IOException(s"dhash-index aside failed: $target -> $aside")
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"dhash-index swap failed: $staging -> $target")
-    fs.delete(aside, true)
-  }
+                      indexDir: String): Unit =
+    graft.Landing.swap(s, indexDir) { staging =>
+      dhashBands(decode(assets), "image")
+        .select(col("asset_id").as("matched_id"), col("dhash"),
+                col("chunk"), col("ckey"))
+        .repartition(col("chunk"), col("ckey"))
+        .write.mode("overwrite").parquet(staging)
+      Map("_dhash_geometry" -> s"$DhashChunks $DhashChunkBits")
+    }
 
   private def dhashGeometry(s: org.apache.spark.sql.SparkSession,
                             indexDir: String): (Int, Int) = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(indexDir, "_dhash_geometry"))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-    val Array(c, b) = txt.trim.split(" ")
+    val Array(c, b) =
+      graft.Landing.required(s, indexDir, "_dhash_geometry").trim.split(" ")
     (c.toInt, b.toInt)
   }
 

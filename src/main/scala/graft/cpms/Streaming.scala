@@ -101,20 +101,14 @@ object Streaming {
     * batch keys rewrite (same merge expression per bucket).
     */
   def mergeAggregates(spark: SparkSession, batchLatest: DataFrame, aggDir: String): Unit = {
-    val fs0 = new org.apache.hadoop.fs.Path(aggDir)
+    // crash recovery: a crash mid-swap leaves only the aside copy —
+    // restore it before merging, or the exists-check below would silently
+    // reset the table to just this batch
+    graft.Landing.recover(spark, aggDir)
+    val fs = new org.apache.hadoop.fs.Path(aggDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash recovery: a crash between rename(dst, aside) and
-    // rename(staging, dst) leaves only the aside copy — restore it before
-    // merging, or the exists-check below would silently reset the table to
-    // just this batch (and the aside delete would destroy the last copy)
-    locally {
-      val dst0 = new org.apache.hadoop.fs.Path(aggDir)
-      val aside0 = new org.apache.hadoop.fs.Path(aggDir + ".old")
-      if (!fs0.exists(dst0) && fs0.exists(aside0) && !fs0.rename(aside0, dst0))
-        throw new java.io.IOException(s"aggregate recovery failed: $aside0 -> $dst0")
-    }
     val existing =
-      if (fs0.exists(new org.apache.hadoop.fs.Path(aggDir)))
+      if (fs.exists(new org.apache.hadoop.fs.Path(aggDir)))
         spark.read.schema(Schemas.aggregates).parquet(aggDir)
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.aggregates)
@@ -124,24 +118,13 @@ object Streaming {
                   col("ts")).as("r"))
       .select(col("user_id"), col("r.ts").as("ts"), col("r.heart_rate").as("heart_rate"),
               col("r.steps").as("steps"), col("r.calories").as("calories"))
-    // two-phase write: the overwritten table is also this batch's input.
-    // Swap is rename-aside-then-rename-in: a crash never leaves the table
-    // deleted-but-unreplaced — either the old dir is still live, or the
-    // aside copy survives next to the fully-written staging dir for
-    // recovery (delete-then-rename had a window with NEITHER present).
-    val tmp = aggDir + ".staging"
-    merged.write.mode("overwrite").parquet(tmp)
-    val dst = new org.apache.hadoop.fs.Path(aggDir)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val aside = new org.apache.hadoop.fs.Path(aggDir + ".old")
-    fs.delete(aside, true)
-    // a failed aside rename must abort: if dst survives it, the rename-in
-    // below would nest staging INSIDE dst and report success
-    if (fs.exists(dst) && !fs.rename(dst, aside))
-      throw new java.io.IOException(s"aggregate aside failed: $dst -> $aside")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst))
-      throw new java.io.IOException(s"aggregate swap failed: $tmp -> $dst")
-    fs.delete(aside, true)
+    // two-phase write: the overwritten table is also this batch's input,
+    // so it lands through the rename swap ([[graft.Landing]]), never an
+    // in-place overwrite
+    graft.Landing.swap(spark, aggDir) { staging =>
+      merged.write.mode("overwrite").parquet(staging)
+      Map.empty
+    }
   }
 
   /** Bucketed variant of [[mergeAggregates]] — the 100 TB path: the
@@ -159,16 +142,14 @@ object Streaming {
     val fs = new Path(aggDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // crash recovery: a crash mid-swap leaves `bucket=N` missing with only
     // the `.swap_bucket=N` aside surviving — restore any such orphan before
-    // reading, or the bucket silently reads empty and the aside delete
-    // below destroys its last copy
+    // reading, or the bucket silently reads empty and the next swap's
+    // aside delete destroys its last copy
     if (fs.exists(new Path(aggDir))) {
       fs.listStatus(new Path(aggDir)).foreach { st =>
         val nm = st.getPath.getName
-        if (nm.startsWith(".swap_bucket=")) {
-          val dst = new Path(aggDir, "bucket=" + nm.stripPrefix(".swap_bucket="))
-          if (!fs.exists(dst) && !fs.rename(st.getPath, dst))
-            throw new java.io.IOException(s"bucket recovery failed: $nm")
-        }
+        if (nm.startsWith(".swap_bucket="))
+          graft.Landing.restore(fs, st.getPath,
+            new Path(aggDir, "bucket=" + nm.stripPrefix(".swap_bucket=")))
       }
     }
     val withBucket = batchLatest.withColumn(
@@ -201,25 +182,21 @@ object Streaming {
               col("r.heart_rate").as("heart_rate"),
               col("r.steps").as("steps"), col("r.calories").as("calories"),
               col("bucket"))
-    val staging = new Path(aggDir + ".staging")
-    fs.delete(staging, true)
-    merged.write.partitionBy("bucket").mode("overwrite").parquet(staging.toString)
-    touched.foreach { b =>
-      // per-bucket rename-aside swap: the old bucket moves to a
-      // dot-prefixed dir (invisible to parquet readers) before the new one
-      // renames in, so a crash leaves either the old or the new bucket
-      // recoverable — never a deleted-but-unreplaced hole
-      val dst = new Path(s"$aggDir/bucket=$b")
-      val aside = new Path(s"$aggDir/.swap_bucket=$b")
-      fs.delete(aside, true)
-      fs.mkdirs(dst.getParent)
-      if (fs.exists(dst) && !fs.rename(dst, aside))
-        throw new java.io.IOException(s"bucket aside failed: bucket=$b")
-      if (!fs.rename(new Path(s"$staging/bucket=$b"), dst))
-        throw new java.io.IOException(s"bucket swap failed: bucket=$b")
-      fs.delete(aside, true)
+    // one staging write for every touched bucket; the swap step below
+    // commits each bucket out of it instead of renaming the whole table
+    graft.Landing.staged(spark, aggDir) { (_, staging) =>
+      merged.write.partitionBy("bucket").mode("overwrite")
+        .parquet(staging.toString)
+      fs.mkdirs(new Path(aggDir))
+      touched.foreach { b =>
+        // per-bucket rename-aside swap: the old bucket moves to a
+        // dot-prefixed dir (invisible to parquet readers) before the new
+        // one renames in, so a crash leaves either the old or the new
+        // bucket recoverable — never a deleted-but-unreplaced hole
+        graft.Landing.replace(fs, new Path(s"$staging/bucket=$b"),
+          new Path(s"$aggDir/bucket=$b"), new Path(s"$aggDir/.swap_bucket=$b"))
+      }
     }
-    fs.delete(staging, true)
   }
 
   /** One parsed hot-path event (typed view of [[parseEvents]] output). */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Listing, Memo}
+import graft.{Landing, Listing, Memo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Disk-backed cache of DERIVED corpus artifacts — the catalog role a
@@ -16,14 +16,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * instead of re-scanning raw events (cognitive-score-bigdata
   * terraform/main.tf:38-58).
   *
-  * Layout: `<root>/<md5 of corpus absolute path>/<artifact name>/` with
-  * the repo's standard index lifecycle — build into `.staging`, write
-  * the `_fingerprint` sidecar BEFORE the atomic rename, so a concurrent
-  * reader never observes a half-written artifact, and a crash mid-build
-  * leaves the previous version serving. The fingerprint is the
-  * [[graft.Listing]] token of the corpus dir's data files: any
-  * compaction / regeneration of the corpus invalidates every artifact
-  * derived from it at the next read, with zero coordination.
+  * Layout: `<root>/<md5 of corpus absolute path>/<artifact name>/`,
+  * landed by [[graft.Landing.swap]] with a `_fingerprint` sidecar. The
+  * fingerprint is the [[graft.Listing]] token of the corpus dir's data
+  * files: any compaction / regeneration of the corpus invalidates every
+  * artifact derived from it at the next read, with zero coordination.
   *
   * Artifact names carry a version suffix (`cluster_labels_v1`): bumping
   * it when a derivation's semantics change orphans the stale bytes
@@ -68,7 +65,7 @@ object DerivedCache {
 
   /** Serve `<artifact>` for corpus `d`: the persisted parquet if its
     * fingerprint matches the corpus as it stands, else run `build`,
-    * persist with staging→sidecar→swap, and serve the freshly-landed
+    * land it ([[graft.Landing]]), and serve the freshly-landed
     * parquet. The returned frame is always a plain parquet scan — which
     * also truncates any iterative lineage the build carried (the
     * connected-components plans that otherwise need localCheckpoint).
@@ -97,26 +94,14 @@ object DerivedCache {
       org.apache.spark.ml.PipelineModel.load(dir + "/model"))
   }
 
-  private def readSidecar(fs: org.apache.hadoop.fs.FileSystem,
-                          p: org.apache.hadoop.fs.Path): Option[String] =
-    try {
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-        finally in.close()
-      }
-    } catch { case _: java.io.IOException => None }
-
   /** Append-aware [[orBuild]]: the artifact carries a `_manifest`
     * sidecar of the corpus TABLE files it was derived from. When the
     * table changed by pure file addition — the nightly-crawl shape —
     * `delta` derives over ONLY the added files and `merge` folds the
     * result into the landed artifact, so the refresh bill scales with
     * the appended slice, not the corpus. Any other change (rewrite,
-    * delete, compaction) falls back to `full`. Same staging → sidecar →
-    * swap lifecycle, so readers never see a half-merged artifact and
-    * the concurrent-writer races resolve as in [[serve]].
+    * delete, compaction) falls back to `full`. Landed like [[orBuild]],
+    * so readers never see a half-merged artifact.
     *
     * Correctness contract (what IncrementalCacheSpec pins): `merge(
     * landed, delta(added))` must equal `full` over the grown corpus —
@@ -142,8 +127,6 @@ object DerivedCache {
     val cur = Listing.files(s, if (table == ".") d else s"$d/$table")
     val curText = cur.map(_._1).mkString("\n")
     val token = Listing.token(cur.map(_._1))
-    val conf = s.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(dirStr).getFileSystem(conf)
     // the `_table` sidecar names the manifest's table so [[status]] can
     // re-derive THIS artifact's freshness token (not just the default
     // documents.parquet one) without touching the serve path
@@ -152,8 +135,7 @@ object DerivedCache {
         staging =>
       // decide delta-vs-full HERE, while the previous version is still
       // landed at the target (materialize always runs before the swap)
-      val stored = readSidecar(
-        fs, new org.apache.hadoop.fs.Path(dirStr, "_manifest"))
+      val stored = Landing.sidecar(s, dirStr, "_manifest")
         .map(_.linesIterator.filter(_.nonEmpty).toSet)
         .getOrElse(Set.empty)
       val curSet = cur.map(_._1).toSet
@@ -187,110 +169,26 @@ object DerivedCache {
     readCached(s, dir, token)
   }
 
-  /** The shared lifecycle with the freshness token and extra sidecars made
-    * explicit — the append-aware path supplies a TABLE-scoped manifest
-    * digest instead of the corpus-wide fingerprint, plus the manifest
-    * text itself as a `_manifest` sidecar (underscore-prefixed, so
-    * parquet scans of the artifact dir ignore it).
+  /** Serve `dirStr` if its `_fingerprint` sidecar equals `fp`, else
+    * land `materialize(staging)` with `sidecars` plus the fingerprint.
+    * The append-aware path supplies a TABLE-scoped manifest digest
+    * instead of the corpus-wide fingerprint.
     */
   private def serveWith(s: SparkSession, dirStr: String, fp: String,
                         sidecars: Map[String, String])
                        (materialize: String => Unit): String = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val target = new org.apache.hadoop.fs.Path(dirStr)
-    val fs = target.getFileSystem(conf)
-    val sidecar = new org.apache.hadoop.fs.Path(target, "_fingerprint")
-    val fresh =
-      fs.exists(sidecar) && {
-        val in = fs.open(sidecar)
-        val stored =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        stored == fp
+    // deterministic derivations make a concurrent winner's fresh landing
+    // bit-identical to ours, so it is served, never renamed over — also
+    // when an incremental merge, which reads the live artifact, fails
+    // because the winner swapped those files away
+    def fresh() =
+      Landing.sidecar(s, dirStr, "_fingerprint").map(_.trim).contains(fp)
+    if (!fresh()) try
+      Landing.swap(s, dirStr, fresh _) { staging =>
+        materialize(staging)
+        sidecars + ("_fingerprint" -> fp)
       }
-    if (!fresh) try {
-      // reap siblings stranded by CRASHED earlier builds — writer-unique
-      // names mean a killed JVM leaks its '.staging-xxxx' (and a failed
-      // swap its '.old-xxxx') forever, and retries add more. A LIVE
-      // concurrent writer's staging is actively being written, so only
-      // dirs idle past a TTL are reclaimed (mtime refreshes as parquet
-      // parts land)
-      reapStale(fs, target)
-      // writer-unique staging: two sessions racing to build the same
-      // artifact (two nightly jobs, a backfill beside a cron) must not
-      // truncate each other's half-written staging dir
-      val staging = new org.apache.hadoop.fs.Path(
-        dirStr + ".staging-" + java.util.UUID.randomUUID().toString.take(8))
-      val aside = new org.apache.hadoop.fs.Path(
-        dirStr + ".old-" + java.util.UUID.randomUUID().toString.take(8))
-      try {
-        fs.delete(staging, true)
-        def targetFresh: Boolean =
-          try fs.exists(sidecar) && {
-            val in = fs.open(sidecar)
-            val stored =
-              try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-              finally in.close()
-            stored == fp
-          } catch { case _: java.io.IOException => false }
-        try materialize(staging.toString)
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            // an incremental merge READS the live artifact while it
-            // builds; a concurrent winner's swap moves those files out
-            // from under the running job (rename to .old-*, then
-            // delete) and the scan throws. If a fresh artifact landed,
-            // serve it — deterministic derivations make the winner's
-            // bytes identical to what this build would have produced —
-            // instead of surfacing a failure for a race that plain
-            // rebuilds already resolve gracefully
-            if (targetFresh) return dirStr else throw e
-        }
-        (sidecars + ("_fingerprint" -> fp)).foreach { case (name, text) =>
-          val out = fs.create(
-            new org.apache.hadoop.fs.Path(staging, name), true)
-          try out.write(text.getBytes("UTF-8")) finally out.close()
-        }
-        // last-check-wins: a concurrent writer may have landed this
-        // artifact while our build ran. Deterministic derivations make
-        // the winner's bytes bit-identical — serve theirs, drop ours,
-        // and never rename over a live fresh artifact
-        if (targetFresh) return dirStr
-        def swapFailed(step: String): Nothing = {
-          // second line of defense: the winner landed between the
-          // re-check above and the rename
-          if (targetFresh) throw ServedByConcurrentWriter
-          throw new java.io.IOException(
-            s"derived-cache $step failed: $staging -> $target")
-        }
-        try {
-          if (fs.exists(target) && !fs.rename(target, aside))
-            swapFailed("aside")
-          if (!fs.rename(staging, target)) swapFailed("swap")
-          // HDFS-semantics rename SUCCEEDS by nesting src INSIDE an
-          // existing dst: if the winner landed target between the
-          // re-check and the rename, our staging is now a child of the
-          // live artifact and a recursive parquet listing would read
-          // duplicate rows — detect, unpollute, serve the winner's
-          val nested = new org.apache.hadoop.fs.Path(
-            target, staging.getName)
-          if (fs.exists(nested)) {
-            fs.delete(nested, true)
-            throw ServedByConcurrentWriter
-          }
-        } catch {
-          case ServedByConcurrentWriter => ()
-        }
-      } finally {
-        // this attempt's staging/aside never outlive the call: staging
-        // is gone on success (renamed away) and deleted on any failure;
-        // aside only ever holds the displaced STALE version (unique
-        // name, stale fingerprint — never serveable), so it is
-        // reclaimed on every exit path including a thrown swap
-        fs.delete(staging, true)
-        fs.delete(aside, true)
-      }
-    } finally {
+    finally {
       // whatever landed — our build, or a concurrent winner's — every
       // session's memoized plan of the dir may index replaced files,
       // even when the token is unchanged
@@ -299,51 +197,6 @@ object DerivedCache {
     }
     dirStr
   }
-
-  /** TTL for reclaiming `.staging-*` / `.old-*` siblings left by
-    * crashed builds. Liveness is judged by the NEWEST mtime anywhere in
-    * the candidate's subtree, not the top dir's: a running Spark write
-    * keeps landing task files under `_temporary/` (the committer only
-    * renames them up at job commit), so the top dir's own mtime can sit
-    * at job-setup time for the whole build — while the tree's newest
-    * file stays recent as long as tasks make progress.
-    */
-  private val ReapIdleMs = 60L * 60 * 1000
-
-  private def newestMtime(fs: org.apache.hadoop.fs.FileSystem,
-                          p: org.apache.hadoop.fs.Path,
-                          depth: Int): Long = {
-    val st = fs.getFileStatus(p)
-    if (!st.isDirectory || depth == 0) st.getModificationTime
-    else {
-      val kids = fs.listStatus(p)
-      if (kids.isEmpty) st.getModificationTime
-      else math.max(st.getModificationTime,
-                    kids.map(k => newestMtime(fs, k.getPath, depth - 1)).max)
-    }
-  }
-
-  private def reapStale(fs: org.apache.hadoop.fs.FileSystem,
-                        target: org.apache.hadoop.fs.Path): Unit =
-    try {
-      val parent = target.getParent
-      if (parent != null && fs.exists(parent)) {
-        val now = System.currentTimeMillis()
-        fs.listStatus(parent).foreach { st =>
-          val n = st.getPath.getName
-          val candidate =
-            n.startsWith(target.getName + ".staging-") ||
-            n.startsWith(target.getName + ".old-")
-          if (candidate &&
-              now - newestMtime(fs, st.getPath, 4) > ReapIdleMs)
-            fs.delete(st.getPath, true)
-        }
-      }
-    } catch { case _: java.io.IOException => () } // best-effort
-
-  /** Control-flow marker for the lost-the-swap-race path in [[serve]]. */
-  private object ServedByConcurrentWriter
-      extends Exception with scala.util.control.NoStackTrace
 
   /** Where an artifact for corpus `d` lives (test observability and
     * operational tooling — consumers go through [[orBuild]]).
@@ -410,13 +263,11 @@ object DerivedCache {
       if (!fs.exists(dir)) Seq.empty[(String, Boolean, Long, Long)]
       else fs.listStatus(dir).toSeq
         .filter(_.isDirectory)
-        .filterNot(st => st.getPath.getName.contains(".staging-") ||
-                         st.getPath.getName.contains(".old-"))
+        .filterNot(st => Landing.isSibling(st.getPath.getName))
         .sortBy(_.getPath.getName)
         .map { st =>
-          val stored = readSidecar(fs,
-            new org.apache.hadoop.fs.Path(st.getPath, "_fingerprint"))
-            .map(_.trim)
+          val art = st.getPath.toString
+          val stored = Landing.sidecar(s, art, "_fingerprint").map(_.trim)
           // lifecycle disambiguation: a `_manifest` sidecar marks the
           // append-incremental lifecycle, whose token is the manifest
           // digest of the table `_table` names (documents.parquet for
@@ -424,14 +275,12 @@ object DerivedCache {
           // sidecar marks a second-order artifact keyed on ANOTHER
           // artifact dir's manifest; everything else is
           // corpus-fingerprint keyed
-          val sourceSidecar = readSidecar(fs,
-            new org.apache.hadoop.fs.Path(st.getPath, "_source"))
+          val sourceSidecar = Landing.sidecar(s, art, "_source")
             .map(_.trim).filter(_.nonEmpty)
           val expected =
             if (fs.exists(new org.apache.hadoop.fs.Path(st.getPath,
                                                         "_manifest")))
-              manifestFp(readSidecar(fs,
-                  new org.apache.hadoop.fs.Path(st.getPath, "_table"))
+              manifestFp(Landing.sidecar(s, art, "_table")
                 .map(_.trim).filter(_.nonEmpty)
                 .getOrElse("documents.parquet"))
             else sourceSidecar match {

@@ -2624,59 +2624,46 @@ object Prep {
     * (a, b, c_ab) and `hist/` (a, c_a) — split tables so a novel pair
     * with a seen history still smooths against c_a — `cuts/` (per-lang
     * head/middle nll boundaries from q143's value-level thirds), and the
-    * `_lm_stats` sidecar with the smoothing vocabulary size. Same
-    * staging → sidecar-before-swap → rename lifecycle as the postings
-    * index, so a reader never sees a half-written LM.
+    * `_lm_stats` sidecar with the smoothing vocabulary size. Landed by
+    * [[graft.Landing.swap]], so a reader never sees a half-written LM.
     */
-  def buildLmIndex(s: SparkSession, d: String, indexDir: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(indexDir + ".staging")
-    fs.delete(staging, true)
-    // count tables come from the append-incremental artifact — after a
-    // nightly append, refreshing the LM index re-pays the appended
-    // slice for counts (the cuts below still need the rescored NLL
-    // table, which is inherently a full pass — see [[bigramNll]])
-    val cab = bigramCounts(s, d)
-    val ca = cab.groupBy("a").agg(sum("c_ab").cast("long").as("c_a"))
-    cab.repartition(col("a"), col("b"))
-      .write.mode("overwrite").parquet(staging.toString + "/bigrams")
-    // the history table stands alone: an arrival's (seen-a, novel-b)
-    // event must smooth against c_a, not the unseen pair's zero
-    ca.repartition(col("a"))
-      .write.mode("overwrite").parquet(staging.toString + "/hist")
-    // per-lang cut boundaries from q143's value-level cumulative thirds;
-    // a null boundary (e.g. the first value already exceeds a third)
-    // means that bucket is empty — the probe coalesces to -infinity
-    val dd = spread(docs(s, d))
-      .select(col("doc_id"), col("lang"),
-              size(tokens(col("text"))).cast("long").as("n_tokens"))
-      .join(bigramNll(s, d).select("doc_id", "nll"), "doc_id")
-    val vb = dd.groupBy("lang", "nll")
-      .agg(sum("n_tokens").cast("long").as("vt"))
-    val wCum = Window.partitionBy("lang").orderBy("nll")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    vb.withColumn("cum_tok", sum("vt").over(wCum).cast("long"))
-      .withColumn("tot",
-        sum("vt").over(Window.partitionBy("lang")).cast("long"))
-      .groupBy("lang")
-      .agg(max(when(col("cum_tok") * 3 <= col("tot"), col("nll")))
-             .as("head_max"),
-           max(when(col("cum_tok") * 3 <= col("tot") * 2, col("nll")))
-             .as("middle_max"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(staging.toString + "/cuts")
-    val v = TrainingData.vocabSize(s, d)
-    val out = fs.create(new org.apache.hadoop.fs.Path(staging, "_lm_stats"), true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    val aside = new org.apache.hadoop.fs.Path(indexDir + ".old")
-    fs.delete(aside, true)
-    if (fs.exists(target) && !fs.rename(target, aside))
-      throw new java.io.IOException(s"lm-index aside failed: $target -> $aside")
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"lm-index swap failed: $staging -> $target")
-    fs.delete(aside, true)
-  }
+  def buildLmIndex(s: SparkSession, d: String, indexDir: String): Unit =
+    graft.Landing.swap(s, indexDir) { staging =>
+      // count tables come from the append-incremental artifact — after a
+      // nightly append, refreshing the LM index re-pays the appended
+      // slice for counts (the cuts below still need the rescored NLL
+      // table, which is inherently a full pass — see [[bigramNll]])
+      val cab = bigramCounts(s, d)
+      val ca = cab.groupBy("a").agg(sum("c_ab").cast("long").as("c_a"))
+      cab.repartition(col("a"), col("b"))
+        .write.mode("overwrite").parquet(staging + "/bigrams")
+      // the history table stands alone: an arrival's (seen-a, novel-b)
+      // event must smooth against c_a, not the unseen pair's zero
+      ca.repartition(col("a"))
+        .write.mode("overwrite").parquet(staging + "/hist")
+      // per-lang cut boundaries from q143's value-level cumulative thirds;
+      // a null boundary (e.g. the first value already exceeds a third)
+      // means that bucket is empty — the probe coalesces to -infinity
+      val dd = spread(docs(s, d))
+        .select(col("doc_id"), col("lang"),
+                size(tokens(col("text"))).cast("long").as("n_tokens"))
+        .join(bigramNll(s, d).select("doc_id", "nll"), "doc_id")
+      val vb = dd.groupBy("lang", "nll")
+        .agg(sum("n_tokens").cast("long").as("vt"))
+      val wCum = Window.partitionBy("lang").orderBy("nll")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      vb.withColumn("cum_tok", sum("vt").over(wCum).cast("long"))
+        .withColumn("tot",
+          sum("vt").over(Window.partitionBy("lang")).cast("long"))
+        .groupBy("lang")
+        .agg(max(when(col("cum_tok") * 3 <= col("tot"), col("nll")))
+               .as("head_max"),
+             max(when(col("cum_tok") * 3 <= col("tot") * 2, col("nll")))
+               .as("middle_max"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(staging + "/cuts")
+      Map("_lm_stats" -> TrainingData.vocabSize(s, d).toString)
+    }
 
   /** The CCNet gate at ingest — q143's serving path, BATCH OR STREAM
     * micro-batch: score each arriving (doc_id, lang, text) against the
@@ -2699,11 +2686,7 @@ object Prep {
     val lm = s.read.parquet(s"$indexDir/bigrams").hint("shuffle_hash")
     val hist = s.read.parquet(s"$indexDir/hist").hint("shuffle_hash")
     val cuts = s.read.parquet(s"$indexDir/cuts")
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(indexDir, "_lm_stats"))
-    val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-            finally in.close()
+    val v = graft.Landing.required(s, indexDir, "_lm_stats").trim.toLong
     docFrame
       .select(col("doc_id"), col("lang"), tokens(col("text")).as("tok"))
       .select(col("doc_id"), col("lang"),
@@ -2935,50 +2918,31 @@ object Prep {
     * corpus-scale form of [[buildSubstrBloom]]'s literal sketch. At
     * ~10^13 grams (100 TB) a driver-held byte array is impossible (JVM
     * 2 GB ceiling at ~2*10^9 grams); a partitioned parquet table has no
-    * ceiling and the stream-static probe shuffles only each micro-batch's
-    * grams against it. Same staging -> sidecar -> rename-swap lifecycle
-    * as the LSH band / postings / IVF indexes, so probes never observe a
-    * half-built table; `_substr_geometry` carries the gram width plus the
+    * grams against it. Landed by [[graft.Landing.swap]], so probes never
+    * observe a half-built table; `_substr_geometry` carries the gram width plus the
     * distinct and total gram counts (the total sizes a derived literal
     * Bloom without re-scanning the corpus). At production scale this is a
     * catalog table bucketed on `h`; plain parquet keeps the harness
     * self-contained.
     */
-  def buildSubstrIndex(s: SparkSession, d: String, indexDir: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(indexDir + ".staging")
-    fs.delete(staging, true)
-    val grams = docs(s, d)
-      .select(explode(gramHashArr(tokens(col("text")))).as("h"))
-    val (nTotal, nDistinct) = {
-      val r = grams.agg(coalesce(count(lit(1)), lit(0L)).as("t"),
-                        coalesce(count_distinct(col("h")), lit(0L)).as("u"))
-        .collect()(0)
-      (r.getLong(0), r.getLong(1))
+  def buildSubstrIndex(s: SparkSession, d: String, indexDir: String): Unit =
+    graft.Landing.swap(s, indexDir) { staging =>
+      val grams = docs(s, d)
+        .select(explode(gramHashArr(tokens(col("text")))).as("h"))
+      val (nTotal, nDistinct) = {
+        val r = grams.agg(coalesce(count(lit(1)), lit(0L)).as("t"),
+                          coalesce(count_distinct(col("h")), lit(0L)).as("u"))
+          .collect()(0)
+        (r.getLong(0), r.getLong(1))
+      }
+      grams.distinct().write.mode("overwrite").parquet(staging)
+      Map("_substr_geometry" -> s"$SubstrG $nDistinct $nTotal")
     }
-    grams.distinct().write.mode("overwrite").parquet(staging.toString)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(staging, "_substr_geometry"), true)
-    try out.write(s"$SubstrG $nDistinct $nTotal".getBytes("UTF-8"))
-    finally out.close()
-    val aside = new org.apache.hadoop.fs.Path(indexDir + ".old")
-    fs.delete(aside, true)
-    if (fs.exists(target) && !fs.rename(target, aside))
-      throw new java.io.IOException(s"substr-index aside failed: $target -> $aside")
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"substr-index swap failed: $staging -> $target")
-    fs.delete(aside, true)
-  }
 
   /** (gram width, distinct grams, total grams) from the index sidecar. */
   def substrIndexGeometry(s: SparkSession, indexDir: String): (Long, Long, Long) = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(indexDir, "_substr_geometry"))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-    val Array(g, u, t) = txt.trim.split(" ")
+    val Array(g, u, t) =
+      graft.Landing.required(s, indexDir, "_substr_geometry").trim.split(" ")
     (g.toLong, u.toLong, t.toLong)
   }
 
@@ -5732,39 +5696,22 @@ object Prep {
   }
 
   /** Persist the DSIR score table: B rows of (b, sc) as parquet with a
-    * geometry sidecar, under the staging -> sidecar-before-swap -> rename
-    * lifecycle shared by the band/fingerprint/postings/IVF/PQ indexes.
-    * The artifact a scoring-at-ingest stream loads once per run.
+    * `_dsir_geometry` sidecar ([[graft.Landing.swap]]). The artifact a
+    * scoring-at-ingest stream loads once per run.
     */
-  def buildDsirIndex(s: SparkSession, d: String, indexDir: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(indexDir + ".staging")
-    fs.delete(staging, true)
-    dsirScores(s, d).write.mode("overwrite").parquet(staging.toString)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(staging, "_dsir_geometry"), true)
-    try out.write(s"$DsirB 1000000".getBytes("UTF-8")) finally out.close()
-    val aside = new org.apache.hadoop.fs.Path(indexDir + ".old")
-    fs.delete(aside, true)
-    if (fs.exists(target) && !fs.rename(target, aside))
-      throw new java.io.IOException(s"dsir-index aside failed: $target -> $aside")
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"dsir-index swap failed: $staging -> $target")
-    fs.delete(aside, true)
-  }
+  def buildDsirIndex(s: SparkSession, d: String, indexDir: String): Unit =
+    graft.Landing.swap(s, indexDir) { staging =>
+      dsirScores(s, d).write.mode("overwrite").parquet(staging)
+      Map("_dsir_geometry" -> s"$DsirB 1000000")
+    }
 
   /** Load a persisted DSIR score table as a dense array indexed by
     * bucket (bounded: B longs on the driver — the POINT of hashed
     * features is that this artifact never grows with the corpus).
     */
   def loadDsirIndex(s: SparkSession, indexDir: String): Array[Long] = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(indexDir, "_dsir_geometry"))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-    val geo = txt.trim.split(" ").map(_.toLong)
+    val geo = graft.Landing.required(s, indexDir, "_dsir_geometry")
+      .trim.split(" ").map(_.toLong)
     require(geo.sameElements(Array(DsirB.toLong, 1000000L)),
             s"persisted DSIR geometry ${geo.mkString("x")} != compiled ${DsirB}x1000000")
     val rows = s.read.parquet(indexDir).collect()

@@ -447,35 +447,16 @@ object TrainingData {
     scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** Persist the PQ index: encoded corpus (vec_id, v, codes) as parquet +
-    * the codebook in an underscore-prefixed text sidecar (geometry line
-    * "m k sub", then one flattened-doubles line per subspace), with the
-    * staging -> sidecar-before-swap -> rename lifecycle shared by the
-    * band/fingerprint/postings/IVF indexes, so a reader never observes
-    * codes whose codebook disagrees. Registers the location so every
-    * session's [[pqIndex]] serves from it.
+    * the `_pq_codebook` sidecar, landed by [[graft.Landing.swap]] so a
+    * reader never observes codes whose codebook disagrees. Registers the
+    * location so every session's [[pqIndex]] serves from it.
     */
   def buildPqIndex(s: SparkSession, d: String, indexDir: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(indexDir + ".staging")
-    fs.delete(staging, true)
-    val (cb, coded) = fitPq(s, d)
-    coded.write.mode("overwrite").parquet(staging.toString)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(staging, "_pq_codebook"), true)
-    // Double.toString round-trips exactly — loaded codebooks are
-    // bit-identical to the fitted ones, so ADC scores cannot drift
-    val txt = (s"$PqM $PqK $PqSub" +:
-      cb.toSeq.map(_.map(java.lang.Double.toString).mkString(" ")))
-      .mkString("\n")
-    try out.write(txt.getBytes("UTF-8")) finally out.close()
-    val aside = new org.apache.hadoop.fs.Path(indexDir + ".old")
-    fs.delete(aside, true)
-    if (fs.exists(target) && !fs.rename(target, aside))
-      throw new java.io.IOException(s"pq-index aside failed: $target -> $aside")
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"pq-index swap failed: $staging -> $target")
-    fs.delete(aside, true)
+    graft.Landing.swap(s, indexDir) { staging =>
+      val (cb, coded) = fitPq(s, d)
+      coded.write.mode("overwrite").parquet(staging)
+      Map(PqCodebook -> pqCodebookText(cb))
+    }
     // in-memory entries for d now duplicate the persisted truth
     pqCache.invalidate(d)
     pqIndexLocations.put(d, indexDir)
@@ -486,12 +467,8 @@ object TrainingData {
     * as a plain parquet scan (schema: vec_id, v, codes).
     */
   def loadPqIndex(s: SparkSession, indexDir: String): (Array[Array[Double]], DataFrame) = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(indexDir, "_pq_codebook"))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-    val lines = txt.trim.linesIterator.toSeq
+    val lines = graft.Landing.required(s, indexDir, PqCodebook)
+      .trim.linesIterator.toSeq
     val geo = lines.head.trim.split(" ").map(_.toInt)
     require(geo.sameElements(Array(PqM, PqK, PqSub)),
             s"persisted PQ geometry ${geo.mkString("x")} != compiled ${PqM}x${PqK}x$PqSub")
@@ -500,6 +477,18 @@ object TrainingData {
             "persisted PQ codebook shape mismatch")
     (cb, s.read.parquet(indexDir))
   }
+
+  /** The codebook sidecar: geometry line "m k sub", then one
+    * flattened-doubles line per subspace. Double.toString round-trips
+    * exactly — loaded codebooks are bit-identical to the fitted ones, so
+    * ADC scores cannot drift.
+    */
+  private val PqCodebook = "_pq_codebook"
+
+  private def pqCodebookText(cb: Array[Array[Double]]): String =
+    (s"$PqM $PqK $PqSub" +:
+      cb.toSeq.map(_.map(java.lang.Double.toString).mkString(" ")))
+      .mkString("\n")
 
   /** Compaction hook: drop every stale cached artifact for the corpus and
     * refit + re-persist the PQ index against the new snapshot (same
@@ -609,34 +598,17 @@ object TrainingData {
     }
 
   /** Persist the IVF index for (corpus, k): cell assignment as parquet +
-    * centroids in an underscore-prefixed text sidecar (parquet readers
-    * ignore it), with the same staging -> sidecar-before-swap -> rename
-    * lifecycle as the band and fingerprint indexes, so a reader never
-    * observes an assignment whose centroids disagree. Registers the
-    * location so every session's [[ivfIndex]] serves from it.
+    * the `_ivf_centroids` sidecar, landed by [[graft.Landing.swap]] so a
+    * reader never observes an assignment whose centroids disagree.
+    * Registers the location so every session's [[ivfIndex]] serves from
+    * it.
     */
   def buildIvfIndex(s: SparkSession, d: String, indexDir: String, k: Int = 16): Unit = {
-    val target = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(indexDir + ".staging")
-    fs.delete(staging, true)
-    val (centers, assigned) = fitIvf(s, d, k)
-    assigned.write.mode("overwrite").parquet(staging.toString)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(staging, "_ivf_centroids"), true)
-    // Double.toString round-trips exactly, so loaded centroids are
-    // bit-identical to the fitted ones
-    val txt = centers.map { case (cell, v) =>
-      cell.toString + " " + v.map(java.lang.Double.toString).mkString(" ")
-    }.mkString("\n")
-    try out.write(txt.getBytes("UTF-8")) finally out.close()
-    val aside = new org.apache.hadoop.fs.Path(indexDir + ".old")
-    fs.delete(aside, true)
-    if (fs.exists(target) && !fs.rename(target, aside))
-      throw new java.io.IOException(s"ivf-index aside failed: $target -> $aside")
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"ivf-index swap failed: $staging -> $target")
-    fs.delete(aside, true)
+    graft.Landing.swap(s, indexDir) { staging =>
+      val (centers, assigned) = fitIvf(s, d, k)
+      assigned.write.mode("overwrite").parquet(staging)
+      Map(IvfCentroids -> ivfCentroidsText(centers))
+    }
     // in-memory entries for (d, k) now duplicate the persisted truth;
     // drop them so every session converges on the index on next access
     ivfCache.invalidateWhere((dir, kk) => dir == d && kk == k)
@@ -647,17 +619,24 @@ object TrainingData {
     * as a plain parquet scan (schema: vec_id, v, cell).
     */
   def loadIvfIndex(s: SparkSession, indexDir: String): (Seq[(Int, Array[Double])], DataFrame) = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(indexDir, "_ivf_centroids"))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-    val centers = txt.trim.linesIterator.map { line =>
-      val parts = line.trim.split(" ")
-      (parts.head.toInt, parts.tail.map(java.lang.Double.parseDouble))
-    }.toSeq
+    val centers = graft.Landing.required(s, indexDir, IvfCentroids)
+      .trim.linesIterator.map { line =>
+        val parts = line.trim.split(" ")
+        (parts.head.toInt, parts.tail.map(java.lang.Double.parseDouble))
+      }.toSeq
     (centers, s.read.parquet(indexDir))
   }
+
+  /** The centroids sidecar: one "cell doubles..." line per centroid.
+    * Double.toString round-trips exactly, so loaded centroids are
+    * bit-identical to the fitted ones.
+    */
+  private val IvfCentroids = "_ivf_centroids"
+
+  private def ivfCentroidsText(centers: Seq[(Int, Array[Double])]): String =
+    centers.map { case (cell, v) =>
+      cell.toString + " " + v.map(java.lang.Double.toString).mkString(" ")
+    }.mkString("\n")
 
   /** Compaction hook: after the corpus changed, drop every stale cached
     * artifact and refit + re-persist the IVF index against the new
@@ -702,70 +681,42 @@ object TrainingData {
     * sign incoming docs with the SAME geometry. At production scale this
     * is a catalog-registered table bucketed on (band, bkey); plain
     * parquet keeps the local harness self-contained.
+    *
+    * Landed by [[graft.Landing.swap]]: mode(overwrite) straight onto
+    * indexDir would delete the old index before the new one is complete.
+    * Object stores get a short old->missing->new window, so compaction
+    * must not run [[refreshBandIndex]] while a stream probing indexDir is
+    * active.
     */
   def buildBandIndex(s: SparkSession, d: String, indexDir: String): Unit = {
     val (nBands, rows) = lshGeometry(corpusCount(s, d))
-    // Build into a staging dir (geometry sidecar written BEFORE the swap)
-    // and rename into place, so a reader never observes an index whose
-    // parquet and geometry disagree — mode(overwrite) straight onto
-    // indexDir would delete the old index before the new one is complete.
-    // The rename swap is atomic on HDFS-like filesystems; object stores
-    // get a short old->missing->new window, so compaction must not run
-    // [[refreshBandIndex]] while a stream probing indexDir is active.
-    val target = new org.apache.hadoop.fs.Path(indexDir)
-    // resolve the FS that OWNS indexDir, not the default FS — with e.g.
-    // an s3a:// index over an hdfs:// defaultFS they differ
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(indexDir + ".staging")
-    fs.delete(staging, true)
-    minhashBands(docs(s, d).select(col("doc_id"), col("text")), nBands, rows)
-      .select(col("doc_id").as("matched_id"), col("sh").as("sh_c"),
-              col("band"), col("bkey"))
-      .write.mode("overwrite").parquet(staging.toString)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(staging, "_lsh_geometry"), true)
-    try out.write(s"$nBands $rows".getBytes("UTF-8")) finally out.close()
-    val aside = new org.apache.hadoop.fs.Path(indexDir + ".old")
-    fs.delete(aside, true)
-    // abort on a failed aside rename — if target survives it, the rename-in
-    // below would nest staging inside it and "succeed" with both live
-    if (fs.exists(target) && !fs.rename(target, aside))
-      throw new java.io.IOException(s"band-index aside failed: $target -> $aside")
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"band-index swap failed: $staging -> $target")
-    fs.delete(aside, true)
+    graft.Landing.swap(s, indexDir) { staging =>
+      minhashBands(docs(s, d).select(col("doc_id"), col("text")), nBands, rows)
+        .select(col("doc_id").as("matched_id"), col("sh").as("sh_c"),
+                col("band"), col("bkey"))
+        .write.mode("overwrite").parquet(staging)
+      Map("_lsh_geometry" -> s"$nBands $rows")
+    }
   }
 
   /** Persist the corpus's winnowing fingerprint index: (matched_id, fp)
     * rows with the df <= cap posting bound applied at BUILD time (a
     * ubiquitous template fingerprint would otherwise fan every probe out
-    * to its whole posting list). Same lifecycle as the LSH band table:
-    * staging write + geometry sidecar + rename swap, rebuilt by
-    * compaction. [[incrementalOverlap]] probes it stream-static.
+    * to its whole posting list). Landed with a `_winnow_geometry`
+    * sidecar ([[graft.Landing.swap]]), rebuilt by compaction.
+    * [[incrementalOverlap]] probes it stream-static.
     */
   def buildFingerprintIndex(s: SparkSession, d: String, indexDir: String,
-                            k: Int = 4, w: Int = 4, cap: Int = 50): Unit = {
-    val target = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(indexDir + ".staging")
-    fs.delete(staging, true)
-    val fps = winnowFingerprints(docs(s, d).select(col("doc_id"), col("text")), k, w)
-    val rare = fps.groupBy("fp").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= cap).select("fp")
-    fps.join(rare, "fp")
-      .select(col("doc_id").as("matched_id"), col("fp"))
-      .write.mode("overwrite").parquet(staging.toString)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(staging, "_winnow_geometry"), true)
-    try out.write(s"$k $w $cap".getBytes("UTF-8")) finally out.close()
-    val aside = new org.apache.hadoop.fs.Path(indexDir + ".old")
-    fs.delete(aside, true)
-    if (fs.exists(target) && !fs.rename(target, aside))
-      throw new java.io.IOException(s"fingerprint-index aside failed: $target -> $aside")
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"fingerprint-index swap failed: $staging -> $target")
-    fs.delete(aside, true)
-  }
+                            k: Int = 4, w: Int = 4, cap: Int = 50): Unit =
+    graft.Landing.swap(s, indexDir) { staging =>
+      val fps = winnowFingerprints(docs(s, d).select(col("doc_id"), col("text")), k, w)
+      val rare = fps.groupBy("fp").agg(count(lit(1)).as("df"))
+        .filter(col("df") <= cap).select("fp")
+      fps.join(rare, "fp")
+        .select(col("doc_id").as("matched_id"), col("fp"))
+        .write.mode("overwrite").parquet(staging)
+      Map("_winnow_geometry" -> s"$k $w $cap")
+    }
 
   /** BM25 scoring core shared by q98 (in-line corpus scan) and
     * [[bm25Search]] (persisted postings probe) — ONE expression spelling,
@@ -807,49 +758,31 @@ object TrainingData {
     * plus a `_postings_stats` sidecar carrying the exact corpus scalars
     * (doc count, summed doc length) BM25 length-normalization needs —
     * the persisted postings table q86/q98's docs promise at 100 TB,
-    * where search must not re-tokenize the corpus per query. Same
-    * staging + sidecar + rename-swap lifecycle as the LSH band and
-    * winnowing indexes; at production scale this is a catalog table
+    * where search must not re-tokenize the corpus per query. Landed by
+    * [[graft.Landing.swap]]; at production scale this is a catalog table
     * bucketed on term, refreshed by compaction.
     */
-  def buildPostingsIndex(s: SparkSession, d: String, indexDir: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(indexDir + ".staging")
-    fs.delete(staging, true)
-    val base = docs(s, d).select(col("doc_id"), col("text"))
-    spread(base)
-      .select(col("doc_id"), size(tokens(col("text"))).as("dl"),
-              explode(tokens(col("text"))).as("term"))
-      .groupBy("term", "doc_id")
-      .agg(count(lit(1)).cast("long").as("tf"), first("dl").as("dl"))
-      .repartition(col("term"))
-      .sortWithinPartitions("term", "doc_id")
-      .write.mode("overwrite").parquet(staging.toString)
-    val stats = base
-      .agg(count(lit(1)).cast("long").as("n"),
-           sum(size(tokens(col("text")))).cast("long").as("sumdl"))
-      .head()
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(staging, "_postings_stats"), true)
-    try out.write(s"${stats.getLong(0)} ${stats.getLong(1)}".getBytes("UTF-8"))
-    finally out.close()
-    val aside = new org.apache.hadoop.fs.Path(indexDir + ".old")
-    fs.delete(aside, true)
-    if (fs.exists(target) && !fs.rename(target, aside))
-      throw new java.io.IOException(s"postings-index aside failed: $target -> $aside")
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"postings-index swap failed: $staging -> $target")
-    fs.delete(aside, true)
-  }
+  def buildPostingsIndex(s: SparkSession, d: String, indexDir: String): Unit =
+    graft.Landing.swap(s, indexDir) { staging =>
+      val base = docs(s, d).select(col("doc_id"), col("text"))
+      spread(base)
+        .select(col("doc_id"), size(tokens(col("text"))).as("dl"),
+                explode(tokens(col("text"))).as("term"))
+        .groupBy("term", "doc_id")
+        .agg(count(lit(1)).cast("long").as("tf"), first("dl").as("dl"))
+        .repartition(col("term"))
+        .sortWithinPartitions("term", "doc_id")
+        .write.mode("overwrite").parquet(staging)
+      val stats = base
+        .agg(count(lit(1)).cast("long").as("n"),
+             sum(size(tokens(col("text")))).cast("long").as("sumdl"))
+        .head()
+      Map("_postings_stats" -> s"${stats.getLong(0)} ${stats.getLong(1)}")
+    }
 
   private def postingsStats(s: SparkSession, indexDir: String): (Long, Long) = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(indexDir, "_postings_stats"))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-    val Array(n, sumdl) = txt.trim.split(" ")
+    val Array(n, sumdl) =
+      graft.Landing.required(s, indexDir, "_postings_stats").trim.split(" ")
     (n.toLong, sumdl.toLong)
   }
 
@@ -888,12 +821,8 @@ object TrainingData {
       .filter(col("n_terms") === terms.size)
 
   private def fingerprintGeometry(s: SparkSession, indexDir: String): (Int, Int, Int) = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(indexDir, "_winnow_geometry"))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-    val Array(k, w, cap) = txt.trim.split(" ")
+    val Array(k, w, cap) =
+      graft.Landing.required(s, indexDir, "_winnow_geometry").trim.split(" ")
     (k.toInt, w.toInt, cap.toInt)
   }
 
@@ -929,12 +858,8 @@ object TrainingData {
   }
 
   private def bandIndexGeometry(s: SparkSession, indexDir: String): (Int, Int) = {
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(indexDir, "_lsh_geometry"))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-    val Array(b, r) = txt.trim.split(" ")
+    val Array(b, r) =
+      graft.Landing.required(s, indexDir, "_lsh_geometry").trim.split(" ")
     (b.toInt, r.toInt)
   }
 
@@ -1036,43 +961,23 @@ object TrainingData {
     * ~12 bytes/row after parquet column pruning, 1B vectors ≈ 12 GB
     * instead of the 256 GB float payload. The full vector column rides
     * in the same files for offline exact re-ranks (column-pruned away on
-    * the probe path). Both sidecars travel with the table in the shared
-    * staging -> sidecar -> rename lifecycle: `_ivf_centroids` (the IVF
-    * format) and `_pq_codebook` (the PQ format), so the probe bands and
-    * scores with exactly the artifacts the table was built from.
+    * the probe path). Both sidecars land with the table
+    * ([[graft.Landing.swap]]): `_ivf_centroids` (the IVF format) and
+    * `_pq_codebook` (the PQ format), so the probe bands and scores with
+    * exactly the artifacts the table was built from.
     */
   def buildIvfPqIndex(s: SparkSession, d: String, indexDir: String,
-                      k: Int = 16): Unit = {
-    val target = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = target.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(indexDir + ".staging")
-    fs.delete(staging, true)
-    val (centers, assigned) = ivfIndex(s, d, k)
-    val (cb, coded) = pqIndex(s, d)
-    assigned.select(col("vec_id"), col("cell"), col("v"))
-      .join(coded.select(col("vec_id"), col("codes")), "vec_id")
-      .repartition(col("cell"))
-      .write.mode("overwrite").parquet(staging.toString)
-    val co = fs.create(
-      new org.apache.hadoop.fs.Path(staging, "_ivf_centroids"), true)
-    val ctxt = centers.map { case (cell, v) =>
-      cell.toString + " " + v.map(java.lang.Double.toString).mkString(" ")
-    }.mkString("\n")
-    try co.write(ctxt.getBytes("UTF-8")) finally co.close()
-    val po = fs.create(
-      new org.apache.hadoop.fs.Path(staging, "_pq_codebook"), true)
-    val ptxt = (s"$PqM $PqK $PqSub" +:
-      cb.toSeq.map(_.map(java.lang.Double.toString).mkString(" ")))
-      .mkString("\n")
-    try po.write(ptxt.getBytes("UTF-8")) finally po.close()
-    val aside = new org.apache.hadoop.fs.Path(indexDir + ".old")
-    fs.delete(aside, true)
-    if (fs.exists(target) && !fs.rename(target, aside))
-      throw new java.io.IOException(s"ivfpq-index aside failed: $target -> $aside")
-    if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"ivfpq-index swap failed: $staging -> $target")
-    fs.delete(aside, true)
-  }
+                      k: Int = 16): Unit =
+    graft.Landing.swap(s, indexDir) { staging =>
+      val (centers, assigned) = ivfIndex(s, d, k)
+      val (cb, coded) = pqIndex(s, d)
+      assigned.select(col("vec_id"), col("cell"), col("v"))
+        .join(coded.select(col("vec_id"), col("codes")), "vec_id")
+        .repartition(col("cell"))
+        .write.mode("overwrite").parquet(staging)
+      Map(IvfCentroids -> ivfCentroidsText(centers),
+          PqCodebook -> pqCodebookText(cb))
+    }
 
   /** Compaction hook: after the corpus changed, drop every stale cached
     * artifact and rebuild + re-persist the composed IVF-PQ table against

@@ -49,4 +49,14 @@ class IvfIndexSpec extends AnyFunSuite with SparkSpec {
       TrainingData.invalidate(sf)
     }
   }
+
+  test("an index dir without its centroids sidecar fails naming the sidecar path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-nosidecar")
+      .toString + "/ivf_index"
+    spark.range(1).write.parquet(dir)
+    val e = intercept[java.io.FileNotFoundException] {
+      TrainingData.loadIvfIndex(spark, dir)
+    }
+    assert(e.getMessage.contains(s"$dir/_ivf_centroids"), e.getMessage)
+  }
 }

@@ -123,4 +123,14 @@ class SubstrIndexSpec extends AnyFunSuite with SparkSpec {
     assert(literalSide === tableSide,
            "both sides of the size switch must emit the same per-doc verdicts")
   }
+
+  test("an index dir without its geometry sidecar fails naming the sidecar path") {
+    val dir = java.nio.file.Files.createTempDirectory("substr_nosidecar")
+      .resolve("index").toString
+    spark.range(1).write.parquet(dir)
+    val e = intercept[java.io.FileNotFoundException] {
+      Prep.substrIndexGeometry(spark, dir)
+    }
+    assert(e.getMessage.contains(s"$dir/_substr_geometry"), e.getMessage)
+  }
 }
