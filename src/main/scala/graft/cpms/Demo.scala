@@ -9,18 +9,28 @@ import org.apache.spark.sql.functions._
   * runnable main.
   *
   * Usage: runMain graft.cpms.Demo [csvDir] [workDir]
+  *
+  * Without `csvDir`, the star schema is a seeded fixture written under
+  * `workDir/csv` by `Generators.starSchemaCsv`.
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val csvDir  = args.headOption.getOrElse("/root/reference/data")
     val workDir = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("cpms-demo").toString)
+    val csvDir = args.headOption.getOrElse {
+      val dir = s"$workDir/csv"
+      println(s"[demo] fixture: ${Generators.starSchemaCsv(dir)} in $dir")
+      dir
+    }
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
       .appName("cpms-demo")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the managed tables of step 5 live under workDir: a warehouse in the
+      // cwd would keep their locations and fail the next run's saveAsTable
+      .config("spark.sql.warehouse.dir", s"$workDir/warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -56,6 +56,29 @@ class GeneratorsSpec extends AnyFunSuite with SparkSpec {
            "cold lake must retain every raw event exactly once")
   }
 
+  test("star-schema CSVs are byte-identical per seed, with equal tallies") {
+    import java.nio.file.{Files, Paths}
+    def write(seed: Long) = {
+      val dir = Files.createTempDirectory("star").toString
+      (dir, Generators.starSchemaCsv(dir, seed = seed))
+    }
+    val (a, ta) = write(7L)
+    val (b, tb) = write(7L)
+    val files = Seq("users.csv", "cognitive_scores.csv", "tracking_risks.csv")
+    files.foreach { f =>
+      assert(Files.readAllBytes(Paths.get(a, f)) sameElements
+               Files.readAllBytes(Paths.get(b, f)), s"$f differs between runs")
+    }
+    assert(ta === tb)
+    def rows(f: String) = Files.readAllLines(Paths.get(a, f)).size - 1 // header
+    assert(rows("users.csv") === Generators.StarUsers)
+    assert(rows("cognitive_scores.csv") === ta.ownedScores + ta.orphans)
+    assert(rows("tracking_risks.csv") === ta.ownedRisks + ta.orphans)
+    val (c, _) = write(8L)
+    assert(!(Files.readAllBytes(Paths.get(a, "users.csv")) sameElements
+               Files.readAllBytes(Paths.get(c, "users.csv"))), "seed is ignored")
+  }
+
   test("mixed generated streams route correctly by discriminator") {
     val users = Seq("mix-user-1")
     val both = Generators.wearableEvents(spark, users, 50)
