@@ -24,42 +24,13 @@ import scala.util.control.NonFatal
   *    min across the two runs landed within 3% of the round-5 shared-set
   *    total). Interleaving puts ~minutes between a query's samples, so a
   *    slow phase must span the entire bench to bias a min;
-  *  - local[32] with shuffle.partitions=32 and AQE mirrors the grading
-  *    harness and the per-executor parallelism of a real cluster.
+  *  - `Run.session(Run.cores)`: local[N] with shuffle.partitions=N and
+  *    AQE mirrors the per-executor parallelism of a real cluster.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the generated-class cache defaults to 100 entries; 113 queries x
-      // several codegen stages each evict EVERYTHING between a query's
-      // interleaved samples, so every sample would re-pay janino
-      // compilation (~0.1-0.2 s/stage — a uniform +45% on the first
-      // interleaved run). Steady-state execution is what the bench is
-      // after; compilation amortizes to nothing over a real corpus.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // Shuffle writer: with R reducers under the bypass threshold
-      // (default 200), every map task writes R partition files and then
-      // merges them — at shuffle.partitions=32 that is 32 file
-      // creates + codec streams per map task (M x R tiny files), which
-      // profiling showed costing 100-160 ms of shuffle-write time per
-      // map task for kilobyte-sized shuffles (the dominant fixed cost
-      // of EVERY exchange at bench scale). Threshold 0 selects the
-      // sort-based writer: ONE output file + index per map task,
-      // whatever R is. On a production cluster R > 200 so the bypass
-      // path never fires and this setting is a no-op — it only removes
-      // the small-R filesystem-metadata pathology. Overridable for
-      // A/B via SPARK_GRAFT_BYPASS_THRESHOLD.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Run.session(Run.cores)
 
     def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()

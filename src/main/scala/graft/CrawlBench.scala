@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** WARC front-end throughput probe — the "measure, don't guess" tool
@@ -68,14 +67,7 @@ object CrawlBench {
   def main(args: Array[String]): Unit = {
     val files = args.headOption.map(_.toInt).getOrElse(48)
     val members = args.drop(1).headOption.map(_.toInt).getOrElse(192)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Run.session(Run.cores)
 
     def rung(mult: Int): (Long, Double, Long) = {
       val dir = java.nio.file.Files.createTempDirectory("graft-crawlbench")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for selected queries (all when
   * no args) to review pushdown / join strategy / codegen coverage.
   * Usage: runMain graft.Explain [sfDir] [queryName...]
@@ -17,13 +15,7 @@ object Explain {
     val rest = args.drop(if (exec) 2 else 1).toSeq
     val names = if (rest.nonEmpty) rest
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Run.session(Run.cores)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

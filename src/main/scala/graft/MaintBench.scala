@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,22 +18,11 @@ object MaintBench {
     val work = args(1)
     val nSlices = if (args.length > 2) args(2).toInt else 4
     val frac = if (args.length > 3) args(3).toDouble else 0.02
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Run.session(Run.cores)
 
-    val fs = new java.io.File(work)
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.foreach(rmrf)
-      f.delete(); ()
-    }
-    rmrf(fs)
+    val workPath = new org.apache.hadoop.fs.Path(work)
+    workPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(workPath, true)
     val stage = s"$work/stage"
     val corpus = s"$work/corpus"
     operators.DerivedCache.invalidate(corpus)

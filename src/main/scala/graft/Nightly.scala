@@ -59,15 +59,7 @@ object Nightly {
       case Array(c, o)    => (c, o, None)
       case Array(c, o, w) => (c, o, Some(w))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Run.session(Run.cores)
     val report = run(spark, corpus, out, crawl)
     println(report)
     spark.stop()

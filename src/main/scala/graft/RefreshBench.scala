@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: measure the append-refresh story end to end — cold-derive
@@ -15,24 +14,13 @@ object RefreshBench {
     val src = args(0)
     val work = args(1)
     val frac = if (args.length > 2) args(2).toDouble else 0.01
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Run.session(Run.cores)
     import operators.{Curation, Prep, TrainingData}
 
     // fresh working corpus + fresh artifact store
-    val fs = new java.io.File(work)
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.foreach(rmrf)
-      f.delete(); ()
-    }
-    rmrf(fs)
+    val workPath = new org.apache.hadoop.fs.Path(work)
+    workPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(workPath, true)
     spark.read.parquet(s"$src/documents.parquet").repartition(8)
       .write.mode("overwrite").parquet(s"$work/documents.parquet")
     operators.DerivedCache.invalidate(work)

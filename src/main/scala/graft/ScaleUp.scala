@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Dev tool: deterministic FACTOR-x scale-up of a corpus dir's
@@ -53,14 +53,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, factorS) = args
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Run.session(Run.cores)
 
     val docs = spark.read.parquet(s"$src/documents.parquet")
     val nDocs = docs.agg(max("doc_id")).head().getLong(0) + 1

@@ -1,16 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Mirrors the driver's smoke check: SparkEntry.entry must return >0 rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Run.session(Run.cores)
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY_ROWS=$n")
     assert(n > 0, "driver smoke check would fail: entry() returned 0 rows")

@@ -1,26 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare (tools/check.py).
+  * Usage: [SPARK_GRAFT_QUERIES=q1,q2] runMain graft.Verify <sfDir> <outDir>
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
     // optional comma-separated subset for targeted re-checks (the Bench
-    // convention); the full dump remains the default driver contract
+    // convention): only those results and oracle entries are written, so
+    // tools/check.py gates just them. Unset, every query is dumped.
     val subset = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(",").map(_.trim).toSet)
+    val unknown = subset.toSeq.flatten.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty,
+      s"SPARK_GRAFT_QUERIES names unregistered queries: ${unknown.sorted.mkString(", ")}")
+    def wanted(name: String) = subset.forall(_.contains(name))
+    val spark = Run.session(Run.cores)
+    new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => subset.forall(_.contains(name)) }
+      .filter { case (name, _) => wanted(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -41,6 +40,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => wanted(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -1,6 +1,5 @@
 package graft.cpms
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end CPMS pipeline demo: batch ETL of the reference star schema,
@@ -22,17 +21,10 @@ object Demo {
       println(s"[demo] fixture: ${Generators.starSchemaCsv(dir)} in $dir")
       dir
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("cpms-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the managed tables of step 5 live under workDir: a warehouse in the
-      // cwd would keep their locations and fail the next run's saveAsTable
-      .config("spark.sql.warehouse.dir", s"$workDir/warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the managed tables of step 5 live under workDir: a warehouse in the
+    // cwd would keep their locations and fail the next run's saveAsTable
+    val spark = graft.Run.session(graft.Run.cores,
+      "spark.sql.warehouse.dir" -> s"$workDir/warehouse")
     import spark.implicits._
 
     // 1. batch ETL (db_loader semantics)

@@ -2,19 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (JVM-wide). */
+/** One shared local session for all suites (JVM-wide): the mains' recipe
+  * at a fixed `local[4]`. Plan assertions look for artifact names in scan
+  * locations, which Spark abbreviates past `maxMetadataStringLength`
+  * (default 100) — shorter than a scan path under `target/test-tmp`.
+  */
 object SparkTest {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession =
+    Run.session(4, "spark.sql.maxMetadataStringLength" -> "1000")
 }
 
 trait SparkSpec {
