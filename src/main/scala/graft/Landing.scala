@@ -44,45 +44,37 @@ object Landing {
     * or renaming over it.
     */
   def swap(s: SparkSession, target: String, landed: () => Boolean = Never)
-          (write: String => Map[String, String]): Unit =
-    staged(s, target) { (fs, staging) =>
-      val dst = new Path(target)
-      val aside = new Path(s"$target.old-${newId()}")
-      val isLanded = () =>
-        try landed() catch { case _: java.io.IOException => false }
-      try {
-        val built =
-          try Some(write(staging.toString))
-          catch {
-            case scala.util.control.NonFatal(e) =>
-              if (isLanded()) None else throw e
-          }
-        built.foreach { sidecars =>
-          sidecars.foreach { case (name, text) =>
-            val out = fs.create(new Path(staging, name), true)
-            try out.write(text.getBytes("UTF-8")) finally out.close()
-          }
-          // last-check-wins: never rename over a live landing of these bytes
-          if (!isLanded()) replace(fs, staging, dst, aside, isLanded)
-        }
-      } finally {
-        // unless a failed rename-in left it the only copy, for [[recover]]
-        if (fs.exists(dst)) fs.delete(aside, true)
-      }
-    }
-
-  /** Run `use` on a fresh writer-unique `<target>.staging-<id>` sibling,
-    * after reaping idle siblings; the staging dir never outlives the call.
-    * `fs` is the FileSystem that OWNS `target`, not the default FS — with
-    * e.g. an s3a:// index over an hdfs:// defaultFS they differ.
-    */
-  private[graft] def staged[A](s: SparkSession, target: String)
-                              (use: (FileSystem, Path) => A): A = {
+          (write: String => Map[String, String]): Unit = {
     val dst = new Path(target)
+    // the FileSystem that OWNS `target`, not the default FS — with e.g. an
+    // s3a:// index over an hdfs:// defaultFS they differ
     val fs = dst.getFileSystem(s.sparkContext.hadoopConfiguration)
     reapStale(fs, dst)
     val staging = new Path(s"$target.staging-${newId()}")
-    try use(fs, staging) finally fs.delete(staging, true)
+    val aside = new Path(s"$target.old-${newId()}")
+    val isLanded = () =>
+      try landed() catch { case _: java.io.IOException => false }
+    try {
+      val built =
+        try Some(write(staging.toString))
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            if (isLanded()) None else throw e
+        }
+      built.foreach { sidecars =>
+        sidecars.foreach { case (name, text) =>
+          val out = fs.create(new Path(staging, name), true)
+          try out.write(text.getBytes("UTF-8")) finally out.close()
+        }
+        // last-check-wins: never rename over a live landing of these bytes
+        if (!isLanded()) replace(fs, staging, dst, aside, isLanded)
+      }
+    } finally {
+      // the aside goes unless a failed rename-in left it the only copy,
+      // for [[recover]]; the staging dir never outlives the call
+      try { if (fs.exists(dst)) fs.delete(aside, true) }
+      finally fs.delete(staging, true)
+    }
   }
 
   private def newId(): String = java.util.UUID.randomUUID().toString.take(8)
@@ -91,9 +83,8 @@ object Landing {
     * drop the aside. A failed step throws unless `landed` says the target
     * already holds these bytes.
     */
-  private[graft] def replace(fs: FileSystem, src: Path, dst: Path,
-                             aside: Path,
-                             landed: () => Boolean = Never): Unit = {
+  private def replace(fs: FileSystem, src: Path, dst: Path, aside: Path,
+                      landed: () => Boolean): Unit = {
     def failed(step: String): Unit =
       if (!landed())
         throw new java.io.IOException(s"landing $step failed: $src -> $dst")
@@ -122,13 +113,11 @@ object Landing {
     if (!fs.exists(dst))
       siblings(fs, dst).filter(_._2 == "old").map(_._1)
         .sortBy(_.getModificationTime).lastOption
-        .foreach(st => restore(fs, st.getPath, dst))
+        .foreach { st =>
+          if (!fs.rename(st.getPath, dst)) throw new java.io.IOException(
+            s"landing recovery failed: ${st.getPath} -> $dst")
+        }
   }
-
-  /** Rename an orphaned `aside` back to `dst` if `dst` is missing. */
-  private[graft] def restore(fs: FileSystem, aside: Path, dst: Path): Unit =
-    if (!fs.exists(dst) && !fs.rename(aside, dst))
-      throw new java.io.IOException(s"landing recovery failed: $aside -> $dst")
 
   /** The text of sidecar `name` in landed dir `dir`, if present. */
   def sidecar(s: SparkSession, dir: String, name: String): Option[String] = {

@@ -10,13 +10,24 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.cpms.Demo [csvDir] [workDir]
   *
   * Without `csvDir`, the star schema is a seeded fixture written under
-  * `workDir/csv` by `Generators.starSchemaCsv`.
+  * `workDir/csv` by `Generators.starSchemaCsv`. Without `workDir`, the
+  * demo works in a fresh `cpms-demo*` temp dir and deletes it on exit; a
+  * given `workDir` is kept.
   */
 object Demo {
-  def main(args: Array[String]): Unit = {
-    val workDir = args.lift(1).getOrElse(
-      java.nio.file.Files.createTempDirectory("cpms-demo").toString)
-    val csvDir = args.headOption.getOrElse {
+  def main(args: Array[String]): Unit = args.lift(1) match {
+    case Some(workDir) => run(args.headOption, workDir)
+    case None =>
+      val workDir = java.nio.file.Files.createTempDirectory("cpms-demo").toString
+      try run(args.headOption, workDir)
+      finally {
+        val p = new org.apache.hadoop.fs.Path(workDir)
+        p.getFileSystem(new org.apache.hadoop.conf.Configuration()).delete(p, true)
+      }
+  }
+
+  private def run(csvArg: Option[String], workDir: String): Unit = {
+    val csvDir = csvArg.getOrElse {
       val dir = s"$workDir/csv"
       println(s"[demo] fixture: ${Generators.starSchemaCsv(dir)} in $dir")
       dir
@@ -56,7 +67,7 @@ object Demo {
     println(s"[demo] streaming: aggregates=${aggs.count()} users, " +
       s"lake=${spark.read.parquet(s"$workDir/lake").count()} raw events")
 
-    // 3a'. mixed-schema parse (union type routing on the discriminator)
+    // 3a. mixed-schema parse (union type routing on the discriminator)
     val mixed = Streaming.parseMixedEvents(
       (raw.as[String].collect().toSeq :+
         s"""{"user_id":"x","schema":"manual_entry_v1","stress_level":5,"timestamp":"99.0"}""")
@@ -64,17 +75,7 @@ object Demo {
     println(s"[demo] mixed parse: " + mixed.groupBy("schema_kind").count()
       .collect().map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted.mkString(" "))
 
-    // 3b. stateful hot path (flatMapGroupsWithState variant of T3)
-    val mem2 = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
-    mem2.addData(raw.as[String].collect().toIndexedSeq)
-    val stateQ = Streaming.latestStateStream(
-        Streaming.toHotEvents(Streaming.parseEvents(mem2.toDF())))
-      .writeStream.outputMode("update").format("memory").queryName("demo_state").start()
-    stateQ.processAllAvailable(); stateQ.stop()
-    println(s"[demo] stateful latest-state: " +
-      s"${spark.table("demo_state").select("user_id").distinct().count()} users tracked")
-
-    // 3c. generator-driven load (the reference's simulator scripts as
+    // 3b. generator-driven load (the reference's simulator scripts as
     //     seeded DataFrames) through the batch hot path
     val genServed = Streaming.latestPerUserInBatch(Streaming.parseEvents(
       Generators.wearableEvents(spark, userIds.toSeq, 10000)))

@@ -11,31 +11,32 @@ object Queries {
 
   /** GET /api/workers/{user_id}/status — latest aggregates row for one key
     * (main.py:55-65, DynamoDB query Limit=1 ScanIndexForward=False).
-    * Point filter + arg-max; on a user_id-bucketed aggregates table the
-    * filter prunes to one bucket/partition.
+    * Point filter + arg-max.
     */
   def workerStatus(aggregates: DataFrame, userId: String): DataFrame =
-    aggregates
-      .filter(col("user_id") === userId)
-      .groupBy("user_id")
-      .agg(max_by(struct(col("ts"), col("heart_rate"), col("steps"), col("calories")),
-                  col("ts")).as("r"))
+    latestBy(aggregates.filter(col("user_id") === userId), col("ts"))
       .select(
         col("user_id"),
-        col("r.ts").as("ts"),
+        col("ts"),
         // serve-side null->0 defaults (main.py:65)
-        coalesce(col("r.heart_rate"), lit(0)).as("heart_rate"),
-        coalesce(col("r.steps"), lit(0)).as("steps"),
-        coalesce(col("r.calories"), lit(0)).as("calories"))
+        coalesce(col("heart_rate"), lit(0)).as("heart_rate"),
+        coalesce(col("steps"), lit(0)).as("steps"),
+        coalesce(col("calories"), lit(0)).as("calories"))
 
   /** Latest aggregates per key for the whole table (the batch view of the
     * serving store; SURVEY A4/T3).
     */
   def latestPerUser(aggregates: DataFrame): DataFrame =
-    aggregates
+    latestBy(aggregates, col("ts"))
+
+  /** The hot state's one arg-max: per `user_id`, the (ts, heart_rate,
+    * steps, calories) of the row with the largest `order`.
+    */
+  private[cpms] def latestBy(rows: DataFrame, order: Column): DataFrame =
+    rows
       .groupBy("user_id")
       .agg(max_by(struct(col("ts"), col("heart_rate"), col("steps"), col("calories")),
-                  col("ts")).as("r"))
+                  order).as("r"))
       .select(col("user_id"), col("r.ts").as("ts"), col("r.heart_rate").as("heart_rate"),
               col("r.steps").as("steps"), col("r.calories").as("calories"))
 

@@ -1,8 +1,8 @@
 package graft.cpms
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The hot/cold dual-path ingest pipeline (reference src/ingestion.py +
   * src/stream_processor.py + hot_path*.tf) as one Structured Streaming job:
@@ -17,8 +17,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Semantics decisions (SURVEY §7.4.1): cross-batch "latest" is event-time
   * arg-max — what the reference's serving read observes (main.py:58-61) —
   * rather than arrival order; in-batch dedup also uses event time, with the
-  * divergence covered by tests. No watermark, matching T4: late records are
-  * retained but never served.
+  * divergence covered by tests. An event-time tie across batches goes to
+  * the newer batch, as the reference's put_item on (user_id, timestamp)
+  * overwrites. No watermark, matching T4: late records are retained but
+  * never served.
   */
 object Streaming {
 
@@ -86,19 +88,14 @@ object Streaming {
     * arg-max with event_id tie-break (A3; see divergence note above).
     */
   def latestPerUserInBatch(events: DataFrame): DataFrame =
-    events
-      .filter(col("user_id").isNotNull && !col("corrupt")) // P4 + T6
-      .groupBy("user_id")
-      .agg(max_by(struct(col("ts"), col("heart_rate"), col("steps"), col("calories")),
-                  struct(col("ts"), col("event_id"))).as("r"))
-      .select(col("user_id"), col("r.ts").as("ts"), col("r.heart_rate").as("heart_rate"),
-              col("r.steps").as("steps"), col("r.calories").as("calories"))
+    Queries.latestBy(
+      events.filter(col("user_id").isNotNull && !col("corrupt")), // P4 + T6
+      struct(col("ts"), col("event_id")))
 
   /** Merge batch-latest rows into the keyed aggregates table: read-modify-
     * write compaction keeping the event-time max per user (K3 upsert,
-    * last-write-wins by event time). Single-table overwrite here; at scale
-    * the table is hash-bucketed by user_id and only buckets containing
-    * batch keys rewrite (same merge expression per bucket).
+    * last-write-wins by event time; on an equal `ts` the batch's row
+    * replaces the stored one).
     */
   def mergeAggregates(spark: SparkSession, batchLatest: DataFrame, aggDir: String): Unit = {
     // crash recovery: a crash mid-swap leaves only the aside copy —
@@ -112,156 +109,16 @@ object Streaming {
         spark.read.schema(Schemas.aggregates).parquet(aggDir)
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.aggregates)
-    val merged = existing.unionByName(batchLatest)
-      .groupBy("user_id")
-      .agg(max_by(struct(col("ts"), col("heart_rate"), col("steps"), col("calories")),
-                  col("ts")).as("r"))
-      .select(col("user_id"), col("r.ts").as("ts"), col("r.heart_rate").as("heart_rate"),
-              col("r.steps").as("steps"), col("r.calories").as("calories"))
+    val merged = Queries.latestBy(
+      existing.withColumn("newer", lit(0))
+        .unionByName(batchLatest.withColumn("newer", lit(1))),
+      struct(col("ts"), col("newer")))
     // two-phase write: the overwritten table is also this batch's input,
     // so it lands through the rename swap ([[graft.Landing]]), never an
     // in-place overwrite
     graft.Landing.swap(spark, aggDir) { staging =>
       merged.write.mode("overwrite").parquet(staging)
       Map.empty
-    }
-  }
-
-  /** Bucketed variant of [[mergeAggregates]] — the 100 TB path: the
-    * serving table lives as `bucket=N/` hash partitions of `user_id`, and
-    * a batch only rewrites buckets that contain batch keys. Untouched
-    * buckets are never read or written, so per-batch cost is
-    * O(touched keys / nBuckets of the table), not O(table).
-    */
-  def mergeAggregatesBucketed(
-      spark: SparkSession,
-      batchLatest: DataFrame,
-      aggDir: String,
-      nBuckets: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(aggDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash recovery: a crash mid-swap leaves `bucket=N` missing with only
-    // the `.swap_bucket=N` aside surviving — restore any such orphan before
-    // reading, or the bucket silently reads empty and the next swap's
-    // aside delete destroys its last copy
-    if (fs.exists(new Path(aggDir))) {
-      fs.listStatus(new Path(aggDir)).foreach { st =>
-        val nm = st.getPath.getName
-        if (nm.startsWith(".swap_bucket="))
-          graft.Landing.restore(fs, st.getPath,
-            new Path(aggDir, "bucket=" + nm.stripPrefix(".swap_bucket=")))
-      }
-    }
-    val withBucket = batchLatest.withColumn(
-      "bucket", pmod(hash(col("user_id")), lit(nBuckets)))
-    val touched = withBucket.select("bucket").distinct()
-      .collect().map(_.getInt(0)).sorted // bounded by nBuckets — driver-safe
-    if (touched.isEmpty) return
-    // ONE job for all touched buckets: read them via partition pruning,
-    // union with the batch, merge, and write `partitionBy(bucket)` to a
-    // staging dir. (A per-bucket loop would serialize the epoch into
-    // O(touched) driver-scheduled jobs.) Untouched buckets are never read
-    // or written; the final swap is O(touched) metadata renames.
-    val existingTouched =
-      if (fs.exists(new Path(aggDir)))
-        spark.read.schema(Schemas.aggregates.add("bucket", "int"))
-          .parquet(aggDir)
-          .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
-      else
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          Schemas.aggregates.add("bucket", "int"))
-    val merged = existingTouched
-      .unionByName(withBucket)
-      // bucket is functionally determined by user_id; grouping on both
-      // keeps it available for the partitioned write without a re-hash
-      .groupBy("bucket", "user_id")
-      .agg(max_by(struct(col("ts"), col("heart_rate"), col("steps"), col("calories")),
-                  col("ts")).as("r"))
-      .select(col("user_id"), col("r.ts").as("ts"),
-              col("r.heart_rate").as("heart_rate"),
-              col("r.steps").as("steps"), col("r.calories").as("calories"),
-              col("bucket"))
-    // one staging write for every touched bucket; the swap step below
-    // commits each bucket out of it instead of renaming the whole table
-    graft.Landing.staged(spark, aggDir) { (_, staging) =>
-      merged.write.partitionBy("bucket").mode("overwrite")
-        .parquet(staging.toString)
-      fs.mkdirs(new Path(aggDir))
-      touched.foreach { b =>
-        // per-bucket rename-aside swap: the old bucket moves to a
-        // dot-prefixed dir (invisible to parquet readers) before the new
-        // one renames in, so a crash leaves either the old or the new
-        // bucket recoverable — never a deleted-but-unreplaced hole
-        graft.Landing.replace(fs, new Path(s"$staging/bucket=$b"),
-          new Path(s"$aggDir/bucket=$b"), new Path(s"$aggDir/.swap_bucket=$b"))
-      }
-    }
-  }
-
-  /** One parsed hot-path event (typed view of [[parseEvents]] output). */
-  final case class HotEvent(
-      user_id: String, event_id: String, ts: java.sql.Timestamp,
-      heart_rate: Option[Int], steps: Option[Int], calories: Option[Int])
-
-  /** Stateful alternative to the foreachBatch merge (SURVEY T3, K3):
-    * per-key state via flatMapGroupsWithState holding only the event-time
-    * max record per user — O(distinct keys) state in the state store,
-    * emitted on change (Update mode). This is the path that scales past a
-    * table rewrite: state lives partitioned in the checkpoint, no
-    * read-modify-write of the serving table per batch.
-    */
-  def latestStateStream(events: Dataset[HotEvent]): Dataset[HotEvent] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[HotEvent, HotEvent](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (_: String, batch: Iterator[HotEvent], state: GroupState[HotEvent]) =>
-          val candidates = state.getOption.iterator ++ batch
-          val latest = candidates.maxBy(e => (e.ts.getTime, e.event_id))
-          if (state.getOption.contains(latest)) Iterator.empty
-          else { state.update(latest); Iterator.single(latest) }
-      }
-  }
-
-  /** [[latestStateStream]] on the Spark 4 `transformWithState` API — the
-    * current-generation stateful operator (SPARK-49564): explicit typed
-    * state handles (ValueState here), RocksDB-backed, with per-state TTL
-    * and timers available where flatMapGroupsWithState offers only one
-    * state object and one timeout. Same semantics as the fMGWS path:
-    * event-time arg-max per key, emit only on change (proven equivalent
-    * under permutation in PropertiesSpec/StreamingSpec).
-    *
-    * Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`); callers set it on
-    * the session before starting the query.
-    */
-  def latestStateStreamTws(events: Dataset[HotEvent]): Dataset[HotEvent] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(
-        new LatestEventProcessor, TimeMode.None(), OutputMode.Update())
-  }
-
-  /** Per-key latest-event state for [[latestStateStreamTws]]. */
-  final class LatestEventProcessor
-      extends StatefulProcessor[String, HotEvent, HotEvent] {
-    @transient private var latest: ValueState[HotEvent] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      latest = getHandle.getValueState[HotEvent](
-        "latest", org.apache.spark.sql.Encoders.product[HotEvent], TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[HotEvent],
-        timers: TimerValues): Iterator[HotEvent] = {
-      val prior = if (latest.exists()) Some(latest.get()) else None
-      val best = (prior.iterator ++ rows).maxBy(e => (e.ts.getTime, e.event_id))
-      if (prior.contains(best)) Iterator.empty
-      else { latest.update(best); Iterator.single(best) }
     }
   }
 
@@ -327,27 +184,18 @@ object Streaming {
               col("session_window.end").as("session_end"),
               col("n_events"))
 
-  /** Typed view of [[parseEvents]] for the stateful path. */
-  def toHotEvents(parsed: DataFrame): Dataset[HotEvent] = {
-    import parsed.sparkSession.implicits._
-    parsed
-      .filter(col("user_id").isNotNull && !col("corrupt"))
-      .select(col("user_id"), col("event_id"), col("ts"), col("heart_rate"), col("steps"), col("calories"))
-      .as[HotEvent]
-  }
-
   /** Start the dual-path query over a streaming DataFrame of raw JSON
     * strings (column `value`). One stream, both sinks written per epoch in
-    * foreachBatch (T9); checkpointing gives exactly-once per sink epoch
-    * (T6).
+    * foreachBatch (T9): the raw payloads append to the lake, and the
+    * batch's latest row per user merges into the aggregates table.
+    * Checkpointing gives exactly-once per sink epoch (T6).
     */
   def start(
       spark: SparkSession,
       rawStream: DataFrame,
       lakeDir: String,
       aggDir: String,
-      checkpointDir: String,
-      nBuckets: Int = 0): StreamingQuery =
+      checkpointDir: String): StreamingQuery =
     rawStream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -359,14 +207,8 @@ object Streaming {
           events.select(col("value"), col("event_id"),
                         to_date(col("ts")).as("dt"))
             .write.mode("append").partitionBy("dt").parquet(lakeDir)
-          // HOT path (T3): latest state per user into the serving table.
-          // nBuckets > 0 selects the 100 TB layout: the table lives as
-          // bucket=N hash partitions and a batch rewrites only touched
-          // buckets in one job; 0 keeps the single-table rewrite (small
-          // deployments, simpler reads)
-          val latest = latestPerUserInBatch(events)
-          if (nBuckets > 0) mergeAggregatesBucketed(spark, latest, aggDir, nBuckets)
-          else mergeAggregates(spark, latest, aggDir)
+          // HOT path (T3): latest state per user into the serving table
+          mergeAggregates(spark, latestPerUserInBatch(events), aggDir)
         } finally events.unpersist()
       }
       .start()

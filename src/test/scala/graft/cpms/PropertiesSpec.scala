@@ -17,29 +17,46 @@ class PropertiesSpec extends AnyFunSuite with SparkSpec {
   private def sample[A](g: Gen[A], seed: Long): A =
     g.apply(Gen.Parameters.default, Seed(seed)).get
 
-  private val eventsGen: Gen[List[(String, Long, Int)]] = for {
+  /** Events of one seed: (user, ts seconds, heart rate, batch, id key). */
+  private val eventsGen: Gen[List[(String, Long, Int, Int, Int)]] = for {
     n <- Gen.choose(1, 25)
     evs <- Gen.listOfN(n, for {
       u <- Gen.oneOf("u1", "u2", "u3")
       t <- Gen.choose(1L, 50L)
       v <- Gen.choose(0, 1000)
-    } yield (u, t, v))
+      b <- Gen.choose(0, 2)
+      k <- Gen.choose(0, 99)
+    } yield (u, t, v, b, k))
   } yield evs
 
   test("property: served state == event with max (ts, arrival) per user, any permutation (T3)") {
-    (1 to 30).foreach { seed =>
-      val evs = sample(eventsGen, seed)
-      val df = evs.zipWithIndex
-        .map { case ((u, t, v), i) => (u, t, v, i.toLong) }
-        .toDF("user_id", "ts", "value", "arrival")
-      val got = df.groupBy("user_id")
-        .agg(max_by(col("value"), struct(col("ts"), col("arrival"))).as("v"))
-        .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-      val exp = evs.zipWithIndex.groupBy(_._1._1).map { case (u, g) =>
-        u -> g.maxBy { case ((_, t, _), i) => (t, i) }._1._3
+    // arrival is (batch, event_id): the later batch wins an equal ts.
+    // Every seed's users carry the seed as a prefix, so all 30 seeds share
+    // the same 3 micro-batches through parseEvents -> latestPerUserInBatch
+    // -> mergeAggregates
+    val evs = (1 to 30).flatMap { seed =>
+      sample(eventsGen, seed).zipWithIndex.map { case ((u, t, v, b, k), i) =>
+        (s"s$seed-$u", t, v, b, f"e$k%02d-$i%02d")
       }
-      assert(got === exp, s"seed=$seed events=$evs")
     }
+    val dir = java.nio.file.Files.createTempDirectory("graft-props").toString + "/agg"
+    (0 to 2).foreach { batch =>
+      val wire = evs.filter(_._4 == batch).map { case (u, t, v, _, id) =>
+        s"""{"event_id":"$id","user_id":"$u","schema":"tracking_v1",""" +
+          s""""heart_rate":$v,"timestamp":"$t"}"""
+      }
+      Streaming.mergeAggregates(spark,
+        Streaming.latestPerUserInBatch(Streaming.parseEvents(wire.toDF("value"))), dir)
+    }
+    val got = spark.read.schema(Schemas.aggregates).parquet(dir).collect()
+      .map(r => r.getAs[String]("user_id") ->
+        (r.getAs[java.sql.Timestamp]("ts").toInstant.getEpochSecond, r.getAs[Int]("heart_rate")))
+      .toMap
+    val exp = evs.groupBy(_._1).map { case (u, g) =>
+      val (_, t, v, _, _) = g.maxBy { case (_, t, _, b, id) => (t, b, id) }
+      u -> (t, v)
+    }
+    assert(got === exp, s"events=$evs")
   }
 
   test("property: distributed top-k == in-memory sorted take (O1)") {
