@@ -127,7 +127,7 @@ object CrawlBench {
 
       // the STREAMING door over the same corpus: readWarcStream ->
       // frontierStream (Bloom seen-sketch + fMGWS budget state)
-      // drained in one AvailableNow pass — prices the state-store
+      // drained in one door pass — prices the state-store
       // path against the batch anti-join above. The pass includes the
       // member parse (like the batch door's timed run, which also
       // re-parses), so the delta over frontier-1x is the honest cost
@@ -144,10 +144,8 @@ object CrawlBench {
       // nondeterminism in the timing)
       val ckpt = java.nio.file.Files.createTempDirectory("graft-cb-ckpt")
       val t2 = System.nanoTime()
-      val q = frS.writeStream.format("memory").queryName("cb_frontier")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val q = Door.drain(frS, ckpt.toString)
+        .format("memory").queryName("cb_frontier").start()
       q.awaitTermination()
       val sS = (System.nanoTime() - t2) / 1e9
       val eS = spark.table("cb_frontier").count()
@@ -187,10 +185,8 @@ object CrawlBench {
         rankCaps = Some(spark.read.parquet(s"$art/caps")))
       val ckpt2 = java.nio.file.Files.createTempDirectory("graft-cb-ck2")
       val t3 = System.nanoTime()
-      val q2 = frC.writeStream.format("memory").queryName("cb_front_sched")
-        .option("checkpointLocation", ckpt2.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val q2 = Door.drain(frC, ckpt2.toString)
+        .format("memory").queryName("cb_front_sched").start()
       q2.awaitTermination()
       val sC = (System.nanoTime() - t3) / 1e9
       println(line("frontier-sched-1x",
@@ -205,10 +201,8 @@ object CrawlBench {
         ranks)
       val ckpt3 = java.nio.file.Files.createTempDirectory("graft-cb-ck3")
       val t4 = System.nanoTime()
-      val q3 = rf.writeStream.format("memory").queryName("cb_refetch")
-        .option("checkpointLocation", ckpt3.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val q3 = Door.drain(rf, ckpt3.toString)
+        .format("memory").queryName("cb_refetch").start()
       q3.awaitTermination()
       val sR = (System.nanoTime() - t4) / 1e9
       println(line("refetch-1x", spark.table("cb_refetch").count(),
@@ -235,10 +229,8 @@ object CrawlBench {
         dueBaseS = 86400L)
       val ckpt4 = java.nio.file.Files.createTempDirectory("graft-cb-ck4")
       val t5 = System.nanoTime()
-      val q4 = rfD.writeStream.format("memory").queryName("cb_refetch_due")
-        .option("checkpointLocation", ckpt4.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val q4 = Door.drain(rfD, ckpt4.toString)
+        .format("memory").queryName("cb_refetch_due").start()
       q4.awaitTermination()
       val sD = (System.nanoTime() - t5) / 1e9
       println(line("refetch-due-1x", spark.table("cb_refetch_due").count(),
@@ -255,10 +247,8 @@ object CrawlBench {
         trapThreshold = 3.0)
       val ckpt5 = java.nio.file.Files.createTempDirectory("graft-cb-ck5")
       val t6 = System.nanoTime()
-      val q5 = frT.writeStream.format("memory").queryName("cb_front_trap")
-        .option("checkpointLocation", ckpt5.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val q5 = Door.drain(frT, ckpt5.toString)
+        .format("memory").queryName("cb_front_trap").start()
       q5.awaitTermination()
       val sT = (System.nanoTime() - t6) / 1e9
       println(line("frontier-livetrap-1x",

@@ -73,6 +73,6 @@ final class Memo[K, V](release: V => Unit = (_: V) => ()) {
 object Memo {
 
   /** A stopped session's entries can never be served again. */
-  private[graft] def stopped(s: SparkSession): Boolean =
+  private def stopped(s: SparkSession): Boolean =
     s.sparkContext.isStopped
 }

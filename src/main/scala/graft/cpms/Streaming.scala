@@ -2,15 +2,15 @@ package graft.cpms
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The hot/cold dual-path ingest pipeline (reference src/ingestion.py +
   * src/stream_processor.py + hot_path*.tf) as one Structured Streaming job:
   *
   *   raw JSON strings --from_json(PERMISSIVE)--> enriched events
-  *     ├─ COLD: append to the lake, partitioned by ingest date `dt`
-  *     │        (realizes the date-partitioning the reference only
-  *     │        comments about, ingestion.py:32-34 — K1)
+  *     ├─ COLD: land in the lake, partitioned by ingest date `dt` and
+  *     │        batch `epoch` (realizes the date-partitioning the
+  *     │        reference only comments about, ingestion.py:32-34 — K1)
   *     └─ HOT:  drop keyless records (P4) -> per-batch latest state per
   *              user (A3) -> merge into the keyed aggregates table (T3/K3)
   *
@@ -185,10 +185,13 @@ object Streaming {
               col("n_events"))
 
   /** Start the dual-path query over a streaming DataFrame of raw JSON
-    * strings (column `value`). One stream, both sinks written per epoch in
-    * foreachBatch (T9): the raw payloads append to the lake, and the
+    * strings (column `value`). One stream, both sinks written per batch in
+    * foreachBatch (T9): the raw payloads land in the lake under
+    * `dt=<ingest date>/epoch=<batchId>` ([[graft.Door.land]]), and the
     * batch's latest row per user merges into the aggregates table.
-    * Checkpointing gives exactly-once per sink epoch (T6).
+    * foreachBatch is at-least-once; both sinks are idempotent under a
+    * replayed batch (the lake overwrites its own epoch, the merge keeps
+    * the event-time max), so a replay leaves each sink as one run would.
     */
   def start(
       spark: SparkSession,
@@ -196,20 +199,16 @@ object Streaming {
       lakeDir: String,
       aggDir: String,
       checkpointDir: String): StreamingQuery =
-    rawStream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val events = parseEvents(batch).cache()
-        try {
-          // COLD path (K1): raw payload + ingest-date partition
+    graft.Door.start(rawStream, checkpointDir) { (batch, id) =>
+      val events = parseEvents(batch).cache()
+      try {
+        // COLD path (K1): raw payload, partitioned by ingest date
+        graft.Door.land(
           events.select(col("value"), col("event_id"),
-                        to_date(col("ts")).as("dt"))
-            .write.mode("append").partitionBy("dt").parquet(lakeDir)
-          // HOT path (T3): latest state per user into the serving table
-          mergeAggregates(spark, latestPerUserInBatch(events), aggDir)
-        } finally events.unpersist()
-      }
-      .start()
+                        to_date(col("ts")).as("dt")),
+          id, lakeDir, Seq("dt", "epoch"))
+        // HOT path (T3): latest state per user into the serving table
+        mergeAggregates(spark, latestPerUserInBatch(events), aggDir)
+      } finally events.unpersist()
+    }
 }

@@ -747,11 +747,10 @@ object Curation {
     * TOKENIZED shards directly (the at-ingest analogue of
     * [[exportPackedTokenIds]]): each micro-batch runs [[tokenizedDocs]]
     * against the PERSISTED corpus merges (no refit — the BPE cache is the
-    * stream-static artifact, like the Bloom/band indexes) and writes
-    * epoch/split-partitioned parquet with dynamic overwrite, so a
-    * replayed epoch overwrites exactly its own output (the
-    * [[startCurationIngest]] exactly-once convention). TokenIdStreamSpec
-    * pins streamed shards == the batch spelling on the same corpus.
+    * stream-static artifact, like the Bloom/band indexes) and lands
+    * epoch/split-partitioned parquet ([[graft.Door.land]]).
+    * TokenIdStreamSpec pins streamed shards == the batch spelling on the
+    * same corpus.
     */
   def startTokenIdIngest(docsStream: org.apache.spark.sql.DataFrame,
                          s: SparkSession, d: String,
@@ -759,13 +758,9 @@ object Curation {
                          horizon: String = "1 hour",
                          quarantineDir: String = null)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    ingestStream(docsStream, horizon).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        val toks = tokenizedDocs(batch, s, d).withColumn("epoch", lit(id))
-          .persist()
+    graft.Door.start(ingestStream(docsStream, horizon), checkpointDir) {
+      (batch, id) =>
+        val toks = tokenizedDocs(batch, s, d).persist()
         // Closed-alphabet policy ENFORCED at the sink: a doc whose ids
         // carry out-of-alphabet holes must not land in the training
         // shards (a null id would poison the packed artifact). Route it
@@ -773,18 +768,13 @@ object Curation {
         // byte-fallback/repair pass; same layout, idempotent replay.
         val qDir =
           if (quarantineDir != null) quarantineDir else outDir + "_quarantine"
-        def land(df: org.apache.spark.sql.DataFrame, dir: String): Unit =
-          df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch", "split")
-            .parquet(dir)
+        val layout = Seq("epoch", "split")
         try {
-          land(toks.filter(!col("has_oov")), outDir)
+          graft.Door.land(toks.filter(!col("has_oov")), id, outDir, layout)
           val oov = toks.filter(col("has_oov"))
-          if (!oov.isEmpty) land(oov, qDir)
+          if (!oov.isEmpty) graft.Door.land(oov, id, qDir, layout)
         } finally toks.unpersist()
-      }
-      .start()
+    }
 
   /** Per-piece attention-boundary rows for any (doc_id, ...) frame —
     * q145's table in NORMALIZED form, derivable at ingest: each doc the
@@ -818,31 +808,23 @@ object Curation {
   /** Streaming boundary-table emitter — closes the "maskless shards"
     * gap of the at-ingest path: while [[startTokenIdIngest]] lands the
     * token-ID shards, this lands the q145 attention-boundary rows for
-    * the same arrivals per micro-batch (epoch-partitioned, idempotent
-    * dynamic overwrite — the shared at-ingest sink convention). The
-    * pack manifest is the stream-static artifact (persisted via
-    * [[packOffsets]], like the LM/band/Bloom indexes the other probes
-    * join); the stream side is one equi-join + per-row arithmetic, so
-    * the emitter is watermark-free and scan-parallel at any rate.
+    * the same arrivals per micro-batch (epoch/split-partitioned,
+    * [[graft.Door.land]]). The pack manifest is the stream-static
+    * artifact (persisted via [[packOffsets]], like the LM/band/Bloom
+    * indexes the other probes join); the stream side is one equi-join +
+    * per-row arithmetic, so the emitter is watermark-free and
+    * scan-parallel at any rate.
     */
   def startPackBoundaryIngest(docsStream: org.apache.spark.sql.DataFrame,
                               s: SparkSession, d: String,
                               outDir: String, checkpointDir: String,
                               horizon: String = "1 hour")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    ingestStream(docsStream, horizon).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        packBoundaryRows(batch, s, d)
-          .withColumn("epoch", lit(id))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("epoch", "split")
-          .parquet(outDir)
-      }
-      .start()
+    graft.Door.start(ingestStream(docsStream, horizon), checkpointDir) {
+      (batch, id) =>
+        graft.Door.land(packBoundaryRows(batch, s, d), id, outDir,
+                        Seq("epoch", "split"))
+    }
 
   /** Terminal sink of the training-set path: materialize the
     * [[trainingSetVerdict]] keepers with text joined back, parquet
@@ -1019,30 +1001,19 @@ object Curation {
   /** Terminal sink of the STREAMING curation path — [[ingestStream]]'s
     * keepers landing in the same split-partitioned corpus layout
     * [[exportCurated]] writes, closing the crawl -> corpus loop end to
-    * end. Each epoch writes under its own `epoch=<batchId>` partition
-    * with dynamic partition overwrite, so a replayed epoch (foreachBatch
-    * is at-least-once on retry) overwrites exactly its own output —
-    * effective exactly-once without read-modify-write of the corpus.
-    * Training jobs read the whole dir; `split=...` still prunes.
+    * end, in the epoch/split layout of [[graft.Door.land]] (a replayed
+    * epoch overwrites exactly its own output). Training jobs read the
+    * whole dir; `split=...` still prunes.
     */
   def startCurationIngest(docsStream: org.apache.spark.sql.DataFrame,
                           corpusDir: String,
                           checkpointDir: String,
                           horizon: String = "1 hour")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    ingestStream(docsStream, horizon).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        batch
-          .withColumn("epoch", lit(id))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("epoch", "split")
-          .parquet(corpusDir)
-      }
-      .start()
+    graft.Door.start(ingestStream(docsStream, horizon), checkpointDir) {
+      (batch, id) =>
+        graft.Door.land(batch, id, corpusDir, Seq("epoch", "split"))
+    }
 
   /** The CONTINUOUS-CRAWL corpus loop, end to end: each micro-batch of
     * curated keepers ([[ingestStream]]'s verdict) lands as a pure file
@@ -1179,11 +1150,8 @@ object Curation {
       Prep.nbScorer(docsStream.sparkSession, g.modelDir, g.theta))
     val fScorer = funnelGate.map(g =>
       Prep.funnelScorer(docsStream.sparkSession, g.modelDir, g.theta))
-    ingestStream(docsStream, horizon).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+    graft.Door.start(ingestStream(docsStream, horizon), checkpointDir) {
+      (batch, id) =>
         val s = batch.sparkSession
         val docCols = Seq(col("doc_id"), col("source"), col("text"),
                           col("lang"),
@@ -1211,21 +1179,10 @@ object Curation {
                      .getOrElse(corpusDir + "_funnel_quarantine"))))
           case _ => (batch, None)
         }
-        keepers
-          .select(docCols: _*)
-          .withColumn("epoch", lit(id))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("epoch")
-          .parquet(s"$corpusDir/documents.parquet")
-        quarantined.foreach { case (gated, rejectedCols, qDir) =>
-          val rejected = rejectedCols.withColumn("epoch", lit(id))
-          if (!rejected.isEmpty) {
-            rejected.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("epoch")
-              .parquet(qDir)
-          }
+        graft.Door.land(keepers.select(docCols: _*), id,
+                        s"$corpusDir/documents.parquet")
+        quarantined.foreach { case (gated, rejected, qDir) =>
+          if (!rejected.isEmpty) graft.Door.land(rejected, id, qDir)
           gated.unpersist()
           ()
         }
@@ -1240,8 +1197,7 @@ object Curation {
           dedupClusters(s, corpusDir).count() // rides the delta-merge path
           ()
         }
-      }
-      .start()
+    }
   }
 
   /** Shared oracle CTE chain of the q129 packing pipeline (curate ->

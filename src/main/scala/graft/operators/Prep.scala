@@ -371,16 +371,15 @@ object Prep {
     * `reportDir` parquet partitioned by epoch — the dashboard table a
     * crawl operator tails. Exactly-once per window: append mode emits a
     * window's counts in exactly one micro-batch, so each (win_ms,
-    * source) report row lands in exactly one epoch partition; a crashed
-    * epoch replays idempotently through the dynamic partition overwrite
-    * (the startCurationIngest convention). DriftStreamSpec proves the
-    * landed rows equal the batch audit's.
+    * source) report row lands in exactly one epoch partition, and a
+    * crashed epoch replays idempotently ([[graft.Door.land]]).
+    * DriftStreamSpec proves the landed rows equal the batch audit's.
     *
     * Caveat (inherent to append mode): the final OPEN window — the one
     * containing the max event time seen so far — is withheld until a
     * LATER arrival advances the watermark past its end (watermark =
     * max ts - delay < window end at the moment the window's own data
-    * arrives). Under AvailableNow that means the newest window's report
+    * arrives). Under a draining door that means the newest window's report
     * lands only on the next run's data, or when the feed appends a
     * beyond-window sentinel/heartbeat row (DriftStreamSpec's far-future
     * sentinel demonstrates the pattern). Closed windows are unaffected.
@@ -390,20 +389,12 @@ object Prep {
                         windowDur: String = "1 hour",
                         watermarkDelay: String = "0 seconds")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    driftTermCountsStream(docsStream, windowDur, watermarkDelay).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty)
-          driftReport(batch, s, d)
-            .withColumn("epoch", lit(id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(reportDir)
-      }
-      .start()
+    graft.Door.start(
+        driftTermCountsStream(docsStream, windowDur, watermarkDelay),
+        checkpointDir) { (batch, id) =>
+      if (!batch.isEmpty)
+        graft.Door.land(driftReport(batch, s, d), id, reportDir)
+    }
 
   /** The DoReMi-style decision step the drift monitor feeds: per CLOSED
     * event-time window, an executable epoch plan — [[windowedSourceStats]]
@@ -411,8 +402,7 @@ object Prep {
     * each closed batch joined to the monitor's landed KL reports at
     * `reportDir` and pushed through [[epochPlanCore]], landing one
     * (win_ms, source) plan row set per window at `planDir` (parquet,
-    * epoch-partitioned, idempotent replay via dynamic partition
-    * overwrite — the startCurationIngest convention).
+    * epoch-partitioned, idempotent replay: [[graft.Door.land]]).
     *
     * Run ORDER is the contract: start/await the drift monitor on the
     * feed first, then this planner on the same feed — both streams close
@@ -430,49 +420,42 @@ object Prep {
                         watermarkDelay: String = "0 seconds",
                         budget: Long = EpochBudget)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    windowedSourceStatsStream(docsStream, windowDur, watermarkDelay).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          // reportDir may not exist yet (monitor not started / no closed
-          // window landed): reading it would kill the stream with an
-          // AnalysisException, and because append-mode emits each closed
-          // window exactly once, every window in THIS batch would be
-          // silently lost. Skip the batch loudly instead — AvailableNow
-          // replays it on the next planner run once reports exist.
-          val reportsReady = {
-            val p = new org.apache.hadoop.fs.Path(reportDir)
-            val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-            fs.exists(p)
-          }
-          if (!reportsReady) {
-            logger.warn(
-              s"epoch planner: no drift reports at $reportDir yet; " +
-              s"skipping batch $id (windows will NOT be planned — start " +
-              "the drift monitor first, then re-run the planner)")
-          } else {
-            val kl = s.read.parquet(reportDir).select("win_ms", "source", "kl")
-            val joined = batch.join(kl, Seq("win_ms", "source"))
-            epochPlanCore(joined, budget, MaxEpochs, groupCols = Seq("win_ms"))
-              .withColumn("epoch", lit(id))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("epoch")
-              .parquet(planDir)
-            // run-order mistakes drop windows via the inner join; make
-            // that visible (cheap: batch is one closed window set)
-            val dropped = batch.select("win_ms", "source").distinct()
-              .join(kl.select("win_ms", "source").distinct(),
-                    Seq("win_ms", "source"), "left_anti").count()
-            if (dropped > 0) logger.warn(
-              s"epoch planner: $dropped (win_ms, source) stats rows had no " +
-              s"KL report in $reportDir and were dropped from batch $id")
-          }
+    graft.Door.start(
+        windowedSourceStatsStream(docsStream, windowDur, watermarkDelay),
+        checkpointDir) { (batch, id) =>
+      if (!batch.isEmpty) {
+        // reportDir may not exist yet (monitor not started / no closed
+        // window landed): reading it would kill the stream with an
+        // AnalysisException, and because append-mode emits each closed
+        // window exactly once, every window in THIS batch would be
+        // silently lost. Skip the batch loudly instead.
+        val reportsReady = {
+          val p = new org.apache.hadoop.fs.Path(reportDir)
+          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+          fs.exists(p)
+        }
+        if (!reportsReady) {
+          logger.warn(
+            s"epoch planner: no drift reports at $reportDir yet; " +
+            s"skipping batch $id (windows will NOT be planned — start " +
+            "the drift monitor first, then re-run the planner)")
+        } else {
+          val kl = s.read.parquet(reportDir).select("win_ms", "source", "kl")
+          val joined = batch.join(kl, Seq("win_ms", "source"))
+          graft.Door.land(
+            epochPlanCore(joined, budget, MaxEpochs, groupCols = Seq("win_ms")),
+            id, planDir)
+          // run-order mistakes drop windows via the inner join; make
+          // that visible (cheap: batch is one closed window set)
+          val dropped = batch.select("win_ms", "source").distinct()
+            .join(kl.select("win_ms", "source").distinct(),
+                  Seq("win_ms", "source"), "left_anti").count()
+          if (dropped > 0) logger.warn(
+            s"epoch planner: $dropped (win_ms, source) stats rows had no " +
+            s"KL report in $reportDir and were dropped from batch $id")
         }
       }
-      .start()
+    }
 
   /** Order-independent, CONSTANT-STATE doc-set digest: each doc hashes
     * to the first 60 bits of md5(doc_id) and the group digest is their
@@ -765,8 +748,9 @@ object Prep {
     * then planner, then this executor over the same feed — a window
     * with no landed plan is dropped by the inner join (start the
     * executor last). `planDir` must exist at start (clear require, not
-    * a mid-stream AnalysisException); idempotent replay via the
-    * ingest-epoch dynamic-overwrite convention.
+    * a mid-stream AnalysisException); idempotent replay through
+    * [[graft.Door.land]] under column `ingest_epoch` (`epoch` is the
+    * plan's own column).
     */
   def startPlanExecutor(docsStream: DataFrame, s: SparkSession,
                         planDir: String, outDir: String,
@@ -778,21 +762,12 @@ object Prep {
     require(p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p),
       s"startPlanExecutor: no landed plans at $planDir — run the drift " +
       "monitor, then the epoch planner, then this executor")
-    planExecuteCore(docsStream.withWatermark("ts", watermarkDelay),
-                    executionPlan(s, planDir), windowDur)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch
-          .withColumn("ingest_epoch", lit(id))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_epoch")
-          .parquet(outDir)
-      }
-      .start()
+    graft.Door.start(
+        planExecuteCore(docsStream.withWatermark("ts", watermarkDelay),
+                        executionPlan(s, planDir), windowDur),
+        checkpointDir) { (batch, id) =>
+      graft.Door.land(batch, id, outDir, epoch = "ingest_epoch")
+    }
   }
 
   /** q109's body, reusable on any (doc_id, text) frame — BATCH OR STREAM:
@@ -3005,14 +2980,11 @@ object Prep {
     * executor — zero shuffle per micro-batch); beyond it the probe is
     * [[substrContaminationBatch]]'s stream-static shuffle join against
     * the partitioned gram table, which has no size ceiling. Both paths
-    * run under one foreachBatch sink writing the same five-column layout
-    * epoch-partitioned with dynamic overwrite (the [[startCurationIngest]]
-    * convention: a replayed epoch overwrites exactly its own output —
-    * effective exactly-once without read-modify-write). Per-doc rollup
-    * after a stream-static join is an unwatermarked aggregate — append-
-    * illegal as a direct sink — which is why the table path MUST gate
-    * through foreachBatch rather than `.writeStream.format(...)` on the
-    * probe frame itself.
+    * run under one foreachBatch sink landing the same five-column layout
+    * epoch-partitioned ([[graft.Door.land]]). Per-doc rollup after a
+    * stream-static join is an unwatermarked aggregate — append-illegal
+    * as a direct sink — which is why the table path MUST gate through
+    * foreachBatch rather than a format sink on the probe frame itself.
     */
   def startSubstrContamination(stream: DataFrame, s: SparkSession,
                                indexDir: String, outDir: String,
@@ -3022,21 +2994,12 @@ object Prep {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val useLiteral = substrLiteralBytes(s, indexDir) <= maxLiteralBytes
     val bloom = if (useLiteral) buildSubstrBloomFromIndex(s, indexDir) else null
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val probed =
-          if (useLiteral) substrContaminationStream(batch, bloom, minShare)
-          else substrContaminationBatch(batch, s, indexDir, minShare)
-        probed.withColumn("epoch", lit(id))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("epoch")
-          .parquet(outDir)
-      }
-      .start()
+    graft.Door.start(stream, checkpointDir) { (batch, id) =>
+      val probed =
+        if (useLiteral) substrContaminationStream(batch, bloom, minShare)
+        else substrContaminationBatch(batch, s, indexDir, minShare)
+      graft.Door.land(probed, id, outDir)
+    }
   }
 
   /** Redact the three PII classes in `c` (emails, NANP phone numbers,

@@ -45,18 +45,18 @@ object TrainingData {
     * on the CANONICALIZED analyzed plan (expression-id-normalized, the
     * same equality the exchange-reuse machinery keys on). Planning
     * metadata only — never rows — and session-scoped like the BPE/vocab
-    * caches (stopped sessions evicted on access).
+    * caches (lifecycle: [[graft.Memo]]).
     */
-  private val spreadCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), Int]
+  private val spreadCache =
+    new Memo[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int]()
 
   private[operators] def spread(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df // micro-batch planning sizes stream tasks
     val target = df.sparkSession.sparkContext.defaultParallelism
-    spreadCache.keys.filter(k => Memo.stopped(k._1))
-      .foreach(spreadCache.remove)
-    val key = (df.sparkSession, df.queryExecution.analyzed.canonicalized)
-    val n = spreadCache.getOrElseUpdate(key, df.rdd.getNumPartitions)
+    val n = spreadCache(df.sparkSession, "spread",
+                        df.queryExecution.analyzed.canonicalized) {
+      df.rdd.getNumPartitions
+    }
     if (n < target) df.repartition(target) else df
   }
 

@@ -1748,17 +1748,15 @@ object Crawl {
         col("m.verdict").as("verdict"))
 
   /** Land the streaming frontier as parquet — the fetch list a crawler
-    * tails. Append-mode file sink with exactly-once file tracking;
-    * AvailableNow drains what has landed and stops, so a scheduler can
-    * run discovery as a cadenced job over the same checkpoint.
+    * tails. Append-mode file sink with exactly-once file tracking,
+    * started through [[graft.Door.drain]]: each run drains what has
+    * landed and stops, so a scheduler can run discovery as a cadenced
+    * job over the same checkpoint.
     */
   def startFrontierSink(frontier: DataFrame, dir: String,
                         checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    frontier.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    graft.Door.drain(frontier, checkpointDir)
       .format("parquet")
       .option("path", dir)
       .start()
@@ -2459,30 +2457,25 @@ object Crawl {
                        topKPerWindow: Int = 10000,
                        maxPerHostPerWindow: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    refetch.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val polite =
-          if (maxPerHostPerWindow <= 0) df
-          else {
-            val hw = org.apache.spark.sql.expressions.Window
-              .partitionBy("host")
-              .orderBy(col("score_e12").desc, col("canon_url"))
-            df.withColumn("_hrk", row_number().over(hw))
-              .filter(col("_hrk") <= maxPerHostPerWindow).drop("_hrk")
-          }
-        val w = org.apache.spark.sql.expressions.Window
-          .orderBy(col("score_e12").desc, col("canon_url"))
-        polite.orderBy(col("score_e12").desc, col("canon_url"))
-          .limit(topKPerWindow)
-          .withColumn("rk", row_number().over(w).cast("long"))
-          .withColumn("window_id", lit(batchId))
-          .write.mode("overwrite")
-          .parquet(s"$dir/window_id=$batchId")
-      }
-      .start()
+    graft.Door.start(refetch, checkpointDir) { (df, batchId) =>
+      val polite =
+        if (maxPerHostPerWindow <= 0) df
+        else {
+          val hw = org.apache.spark.sql.expressions.Window
+            .partitionBy("host")
+            .orderBy(col("score_e12").desc, col("canon_url"))
+          df.withColumn("_hrk", row_number().over(hw))
+            .filter(col("_hrk") <= maxPerHostPerWindow).drop("_hrk")
+        }
+      val w = org.apache.spark.sql.expressions.Window
+        .orderBy(col("score_e12").desc, col("canon_url"))
+      polite.orderBy(col("score_e12").desc, col("canon_url"))
+        .limit(topKPerWindow)
+        .withColumn("rk", row_number().over(w).cast("long"))
+        .withColumn("window_id", lit(batchId))
+        .write.mode("overwrite")
+        .parquet(s"$dir/window_id=$batchId")
+    }
 
   /** Redirect alias edges riding in the crawl: each 3xx capture's
     * (src_url, dst_url = resolved Location, http_status). Downstream:

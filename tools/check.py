@@ -5,9 +5,12 @@ with the Spark result dumped by graft.Verify (columns sorted by name,
 rows sorted, value-level compare). Dev tool only — not part of the
 Scala library.
 
-Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+Each PASS/FAIL line ends with the query's elapsed seconds (DuckDB oracle
+plus the compare), and the run ends with the 10 slowest queries.
+
+Usage: python3 tools/check.py <sfDir> <verifyOutDir> [name,name,...]
 """
-import json, sys, math
+import json, sys, math, time
 import duckdb
 import pandas as pd
 
@@ -42,19 +45,26 @@ def main(sf_dir: str, out_dir: str, only=None) -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    elapsed = {}  # query -> seconds
+
+    def report(name, t0, line):
+        elapsed[name] = time.monotonic() - t0
+        print(f"{line} [{elapsed[name]:.1f} s]", flush=True)
+
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
             continue
+        t0 = time.monotonic()
         try:
             got = pd.read_parquet(f"{out_dir}/{name}")
             exp = con.execute(sql).df()
             g, e = norm(got), norm(exp)
             if list(g.columns) != list(e.columns):
-                print(f"FAIL {name}: columns {list(g.columns)} != {list(e.columns)}")
+                report(name, t0, f"FAIL {name}: columns {list(g.columns)} != {list(e.columns)}")
                 n_fail += 1
                 continue
             if len(g) != len(e):
-                print(f"FAIL {name}: rows {len(g)} != {len(e)}")
+                report(name, t0, f"FAIL {name}: rows {len(g)} != {len(e)}")
                 n_fail += 1
                 continue
             diff_cols = []
@@ -68,15 +78,18 @@ def main(sf_dir: str, out_dir: str, only=None) -> int:
                     i = ok[~ok].index[0]
                     diff_cols.append(f"{c} (e.g. row {i}: {a[i]!r} vs {b[i]!r})")
             if diff_cols:
-                print(f"FAIL {name}: value diff in {diff_cols}")
+                report(name, t0, f"FAIL {name}: value diff in {diff_cols}")
                 n_fail += 1
             else:
-                print(f"PASS {name} ({len(g)} rows)")
+                report(name, t0, f"PASS {name} ({len(g)} rows)")
                 n_pass += 1
         except Exception as ex:
-            print(f"FAIL {name}: {type(ex).__name__}: {ex}")
+            report(name, t0, f"FAIL {name}: {type(ex).__name__}: {ex}")
             n_fail += 1
-    print(f"\n{n_pass} pass / {n_fail} fail")
+    print("\n10 slowest:")
+    for name, s in sorted(elapsed.items(), key=lambda kv: -kv[1])[:10]:
+        print(f"  {s:8.1f} s  {name}")
+    print(f"\n{n_pass} pass / {n_fail} fail", flush=True)
     return 1 if n_fail else 0
 
 
