@@ -35,9 +35,10 @@ object Curation {
 
   /** The block-manager RDD behind a localCheckpoint'ed frame (the thing
     * `Dataset.unpersist` does NOT release — checkpoint storage is
-    * RDD-level, invisible to the SQL cache manager).
+    * RDD-level, invisible to the SQL cache manager). Shared with the
+    * BPE learner's per-round checkpoints.
     */
-  private def ckptRdd(df: org.apache.spark.sql.DataFrame) =
+  private[operators] def ckptRdd(df: org.apache.spark.sql.DataFrame) =
     df.queryExecution.analyzed.collectFirst {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }

@@ -1401,8 +1401,8 @@ object Prep {
       .drop("tok", "features", "rawPrediction", "probability", "prediction")
 
   /** Number of BPE merges q131 learns. Production tokenizers learn
-    * 30k-100k; the loop shape (vocab-bounded distributed passes, 1-row
-    * argmax per step on the driver) is identical at any K.
+    * 30k-100k; the loop shape (vocab-bounded pair-count passes, one
+    * argmax per step) is identical at any K.
     */
   val BpeK = 16
 
@@ -1422,17 +1422,14 @@ object Prep {
         .otherwise(concat(acc, array(s))))
 
   /** q131's body: learn the first `k` byte-pair-encoding merges over the
-    * corpus, distributed — the tokenizer-training step of a pretraining
-    * pipeline (Sennrich et al. 2016). All per-iteration work is bounded
-    * by the WORD VOCABULARY, not the corpus: the (word, count) table is
-    * built in one corpus pass, cached, and each step runs (1) a pair
-    * count over the exploded adjacent-symbol pairs weighted by word
-    * count — one vocab-sized shuffle with map-side partials — and (2) a
-    * pure projection applying the winning merge. Only the 1-row argmax
-    * crosses to the driver per step (the KMeans/IVF iteration shape, not
-    * a collect-the-data loop); ties break (count desc, left, right) so
-    * the merge list is deterministic on any cluster. Returns (step,
-    * left, right, pair_count), one row per learned merge.
+    * corpus — the tokenizer-training step of a pretraining pipeline
+    * (Sennrich et al. 2016), through [[bpeMergeList]] at `batch = 1`, the
+    * exact sequential learner. All per-step work is bounded by the WORD
+    * VOCABULARY, not the corpus: the (word, count) table is built in one
+    * corpus pass, and each step counts adjacent-symbol pairs weighted by
+    * word count and applies the winning merge. Ties break (count desc,
+    * left, right) so the merge list is deterministic on any cluster.
+    * Returns (step, left, right, pair_count), one row per learned merge.
     */
   def bpeMerges(docFrame: DataFrame, k: Int): DataFrame = {
     val spark = docFrame.sparkSession
@@ -1443,29 +1440,40 @@ object Prep {
 
   /** Distinct-word ceiling under which BPE learning folds DRIVER-SIDE.
     * The (word, count) table is vocab-bounded by construction, so when
-    * it is small the k merge iterations are pure in-memory folds — no
-    * reason to pay k shuffle rounds of per-job latency (the dominant
-    * cost at bench scale: ~40 s of scheduling for ~0 s of math). 2M
-    * words × ~16 bytes ≈ 32 MB collected — comfortably driver-sized.
-    * An open-web vocabulary (~1e8 rows with typos/URLs) stays on the
-    * distributed path, which is bit-identical (BpeSpec pins both sides
-    * against the sequential reference).
+    * it is small the learning rounds are pure in-memory folds — no
+    * reason to pay a shuffle round of per-job latency per step (the
+    * dominant cost at bench scale: ~40 s of scheduling for ~0 s of
+    * math). 2M words × ~16 bytes ≈ 32 MB collected — comfortably
+    * driver-sized. An open-web vocabulary (~1e8 rows with typos/URLs)
+    * stays on the distributed rounds, which are bit-identical (BpeSpec
+    * pins both sides against the sequential reference).
     */
   val BpeDriverVocabMax = 2000000L
 
-  /** [[bpeMerges]]' engine, returning the merge list as a driver value
-    * (K rows — bounded by construction). One corpus pass builds the
-    * cached (word, count) table; under [[BpeDriverVocabMax]] distinct
-    * words the k-step fold runs driver-side ([[bpeMergeListLocal]]),
-    * above it each step is ONE Spark job: the argmax action on step i
-    * also materializes the persisted step-i vocab projection, so the
-    * previous generation unpersists one step late instead of paying a
-    * dedicated count() job.
+  /** The BPE learner behind [[bpeMerges]], returning the merge list as a
+    * driver value (K rows — bounded by construction). One corpus pass
+    * builds the cached (word, count) table. Each ROUND then runs ONE
+    * pair count and admits up to `batch` mutually non-interacting merges
+    * from the sorted pair table ([[admitBatch]]), applies them together,
+    * and recounts. A round's first admission is always the sequential
+    * argmax, so `batch = 1` is the exact sequential learner (q131's
+    * oracle recomputes it independently). A larger batch is the
+    * production-vocab-size form (SentencePiece-style): ~k/batch rounds
+    * instead of k — a few hundred instead of 50k at a 32k-100k vocabulary.
+    * Within a round the admitted merges are count-invariant to each
+    * other, and across rounds counts are exact by recount. On real
+    * corpora the list tracks the sequential one exactly (BpeSpec pins
+    * equality at k=1024); adversarially-tied pattern families can
+    * diverge past a round's first admission — the documented
+    * batched-training trade. Under `driverVocabMax` distinct words the
+    * rounds fold driver-side; above it each round is ONE Spark action
+    * over a checkpointed vocab projection.
     */
-  def bpeMergeList(docFrame: DataFrame, k: Int,
+  def bpeMergeList(docFrame: DataFrame, k: Int, batch: Int = 1,
                    driverVocabMax: Long = BpeDriverVocabMax,
                    byteLevel: Boolean = false)
       : Seq[(Long, String, String, Long)] = {
+    require(batch >= 1, s"BPE batch must be at least 1, got $batch")
     val wc = docFrame
       .select(explode(tokens(col("text"))).as("w"))
       .filter(length(col("w")) > 0)
@@ -1476,11 +1484,11 @@ object Prep {
       val rows = wc.collect()
         .map(r => (initialSyms(r.getString(0), byteLevel), r.getLong(1)))
       wc.unpersist()
-      bpeMergeListLocal(rows, k)
+      bpeLearnLocal(rows, k, batch)
     } else
-      try bpeMergeListDistributed(
+      try bpeLearnDistributed(
         wc.select(initialSymsCol(col("w"), byteLevel).as("syms"),
-                  col("wc")), k)
+                  col("wc")), k, batch)
       finally wc.unpersist()
   }
 
@@ -1529,84 +1537,6 @@ object Prep {
     x.length < y.length
   }
 
-  /** Driver-side fold of the BPE iteration for bounded vocabularies:
-    * identical pair counting (adjacent symbols weighted by word count),
-    * identical (count desc, left, right) tie-break in Spark's string
-    * order, identical greedy left-to-right non-overlapping merge
-    * application ([[applyMerge]]'s fold semantics). k × total-symbols
-    * work, zero jobs.
-    */
-  private def bpeMergeListLocal(vocab: Array[(Array[String], Long)],
-                                k: Int): Seq[(Long, String, String, Long)] = {
-    var cur = vocab
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    var step = 1L
-    var done = false
-    while (step <= k && !done) {
-      val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
-      for ((syms, c) <- cur; i <- 0 until syms.length - 1) {
-        val p = (syms(i), syms(i + 1))
-        counts(p) = counts.getOrElse(p, 0L) + c
-      }
-      if (counts.isEmpty) done = true
-      else {
-        val ((l, r), c) = counts.minBy { case ((l, r), c) => (-c, l, r) }(
-          Ordering.Tuple3(Ordering.Long,
-            Ordering.fromLessThan(utf8Lt), Ordering.fromLessThan(utf8Lt)))
-        merges += ((step, l, r, c))
-        cur = cur.map { case (syms, wcount) =>
-          val b = Array.newBuilder[String]
-          var i = 0
-          while (i < syms.length) {
-            if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) {
-              b += (l + r); i += 2
-            } else { b += syms(i); i += 1 }
-          }
-          (b.result(), wcount)
-        }
-        step += 1
-      }
-    }
-    merges.toSeq
-  }
-
-  private def bpeMergeListDistributed(vocab: DataFrame,
-                                      k: Int): Seq[(Long, String, String, Long)] = {
-    var cur = vocab.persist()
-    var prev: DataFrame = null
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    var step = 1L
-    var done = false
-    while (step <= k && !done) {
-      val top = cur
-        .select(col("wc"), explode(filter(zip_with(
-            col("syms"),
-            slice(col("syms"), lit(2), greatest(size(col("syms")) - 1, lit(0))),
-            (a, b) => struct(a.as("l"), b.as("r"))),
-          p => p.getField("r").isNotNull)).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum("wc").as("c"))
-        .orderBy(col("c").desc, col("l"), col("r")).limit(1).collect()
-      // the collect above materialized `cur`'s cache; the previous
-      // generation can no longer be needed by anything
-      if (prev != null) { prev.unpersist(); prev = null }
-      if (top.isEmpty) done = true
-      else {
-        val (l, r, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((step, l, r, c))
-        val next = cur
-          .select(applyMerge(col("syms"), l, r).as("syms"), col("wc"))
-          .persist()
-        prev = cur
-        cur = next
-        step += 1
-      }
-    }
-    if (prev != null) prev.unpersist()
-    cur.unpersist()
-    merges.toSeq
-  }
-
   /** Greedy left-to-right non-overlapping merge of (l, r) in a symbol
     * array — the imperative twin of the [[applyMerge]] codegen fold,
     * shared by the driver-side learner and the large-vocabulary
@@ -1640,7 +1570,9 @@ object Prep {
     * source at or above the level was either admitted or has already
     * stopped the scan. The first admission of every round is therefore
     * always the exact sequential argmax, and each admission extends it
-    * only where counts are provably untouched.
+    * only where counts are provably untouched. Only the first `limit`
+    * candidates are read in order; the rest of the last one's count
+    * level is only tested for interaction, so it may come unordered.
     */
   private def admitBatch(sorted: Seq[(String, String, Long)],
                          limit: Int): Seq[(String, String, Long)] = {
@@ -1675,52 +1607,22 @@ object Prep {
     out.toSeq
   }
 
-  /** Batched BPE learning — the production-vocab-size form of
-    * [[bpeMergeList]] (SentencePiece-style): each ROUND runs ONE
-    * pair-count pass and admits up to `batch` mutually non-interacting
-    * merges from the sorted pair table ([[admitBatch]]), applies them
-    * together, and recounts. ~k/batch distributed jobs instead of k —
-    * the difference between 50k sequential job rounds and a few
-    * hundred at a 32k-100k production vocabulary. Within a round the
-    * admitted merges are count-invariant to each other, so the learned
-    * order is deterministic; across rounds counts are exact by
-    * recount. On real corpora the list tracks the sequential reference
-    * exactly (BpeSpec pins equality at k=1024 on the test corpus and
-    * the oracled 16-prefix); adversarially-tied pattern families can
-    * diverge past a round's first admission — the documented batched-
-    * training trade. The exact sequential learner remains
-    * [[bpeMergeList]] (q131's oracle recomputes it independently).
-    */
-  def bpeMergeListBatched(docFrame: DataFrame, k: Int, batch: Int = 64,
-                          driverVocabMax: Long = BpeDriverVocabMax,
-                          byteLevel: Boolean = false)
-      : Seq[(Long, String, String, Long)] = {
-    val wc = docFrame
-      .select(explode(tokens(col("text"))).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy("w").agg(count(lit(1)).cast("long").as("wc"))
-      .persist()
-    val nVocab = wc.count()
-    if (nVocab <= driverVocabMax) {
-      val rows = wc.collect()
-        .map(r => (initialSyms(r.getString(0), byteLevel), r.getLong(1)))
-      wc.unpersist()
-      bpeMergeListLocalBatched(rows, k, batch)
-    } else
-      try bpeMergeListDistributedBatched(
-        wc.select(initialSymsCol(col("w"), byteLevel).as("syms"),
-                  col("wc")), k, batch)
-      finally wc.unpersist()
-  }
 
-  private def bpeMergeListLocalBatched(vocab: Array[(Array[String], Long)],
-                                       k: Int, batch: Int)
+  /** Driver-side rounds for bounded vocabularies: the same pair counting
+    * (adjacent symbols weighted by word count), the same (count desc,
+    * left, right) order in Spark's string order, the same greedy
+    * left-to-right non-overlapping merge application ([[applyMerge]]'s
+    * fold semantics). Zero jobs.
+    */
+  private def bpeLearnLocal(vocab: Array[(Array[String], Long)],
+                            k: Int, batch: Int)
       : Seq[(Long, String, String, Long)] = {
     var cur = vocab
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var done = false
-    val ord = Ordering.Tuple3(Ordering.Long,
-      Ordering.fromLessThan(utf8Lt), Ordering.fromLessThan(utf8Lt))
+    val str = Ordering.fromLessThan(utf8Lt)
+    val ord = Ordering.by[(String, String, Long), Long](-_._3)
+      .orElseBy(_._1)(str).orElseBy(_._2)(str)
     while (merges.length < k && !done) {
       val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
       for ((syms, c) <- cur; i <- 0 until syms.length - 1) {
@@ -1729,11 +1631,20 @@ object Prep {
       }
       if (counts.isEmpty) done = true
       else {
-        val sorted = counts.toArray
-          .map { case ((l, r), c) => (l, r, c) }
-          .sortBy { case (l, r, c) => (-c, l, r) }(ord)
-        val admitted = admitBatch(sorted.toIndexedSeq,
-                                  math.min(batch, k - merges.length))
+        // admitBatch reads only the `limit` best in order: a bounded heap
+        // finds them without sorting the whole pair table
+        val limit = math.min(batch, k - merges.length)
+        val best = scala.collection.mutable.PriorityQueue.empty(ord)
+        for (((l, r), c) <- counts) {
+          best += ((l, r, c))
+          if (best.size > limit) best.dequeue()
+        }
+        val head = best.dequeueAll.reverse
+        val inHead = head.toSet
+        val admitted = admitBatch(head ++ counts.iterator.collect {
+          case ((l, r), c) if c == head.last._3 && !inHead((l, r, c)) =>
+            (l, r, c)
+        }, limit)
         for ((l, r, c) <- admitted) {
           merges += ((merges.length + 1L, l, r, c))
           cur = cur.map { case (syms, wcount) =>
@@ -1746,21 +1657,17 @@ object Prep {
     merges.toSeq
   }
 
-  private def ckptRdd(df: DataFrame) =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-
-  private def bpeMergeListDistributedBatched(vocab: DataFrame, k: Int,
-                                             batch: Int)
+  private def bpeLearnDistributed(vocab: DataFrame, k: Int, batch: Int)
       : Seq[(Long, String, String, Long)] = {
-    // eager localCheckpoint per round, NOT persist: each round stacks
+    // localCheckpoint per round, NOT persist: each round stacks
     // `batch` nested applyMerge folds, and without truncation the
     // logical plan deepens by that much every round — analysis alone
     // OOMs the driver long before data does (the connected-components
-    // lineage lesson, Curation.scala). On a cluster a reliable
-    // checkpoint dir gives the same truncation with fault tolerance.
-    var cur = vocab.localCheckpoint(true)
+    // lineage lesson, Curation.scala). The checkpoint is lazy: the next
+    // round's pair-count job computes and keeps it, so a round costs one
+    // action, not two. On a cluster a reliable checkpoint dir gives the
+    // same truncation with fault tolerance.
+    var cur = vocab.localCheckpoint(false)
     var prev: DataFrame = null
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var done = false
@@ -1779,8 +1686,10 @@ object Prep {
         .agg(sum("wc").as("c"))
         .orderBy(col("c").desc, col("l"), col("r"))
         .limit(fetch).collect()
+      // the collect above materialized `cur`'s checkpoint; the previous
+      // generation can no longer be needed by anything
       if (prev != null) {
-        ckptRdd(prev).foreach(_.unpersist(false)); prev = null
+        Curation.ckptRdd(prev).foreach(_.unpersist(false)); prev = null
       }
       if (top.isEmpty) done = true
       else {
@@ -1804,13 +1713,13 @@ object Prep {
         // round's checkpoint truncates it
         val next = admitted.foldLeft(cur)((df, m) =>
             df.withColumn("syms", applyMerge(col("syms"), m._1, m._2)))
-          .select(col("syms"), col("wc")).localCheckpoint(true)
+          .select(col("syms"), col("wc")).localCheckpoint(false)
         prev = cur
         cur = next
       }
     }
-    if (prev != null) ckptRdd(prev).foreach(_.unpersist(false))
-    ckptRdd(cur).foreach(_.unpersist(false))
+    if (prev != null) Curation.ckptRdd(prev).foreach(_.unpersist(false))
+    Curation.ckptRdd(cur).foreach(_.unpersist(false))
     merges.toSeq
   }
 

@@ -979,19 +979,6 @@ object TrainingData {
           PqCodebook -> pqCodebookText(cb))
     }
 
-  /** Compaction hook: after the corpus changed, drop every stale cached
-    * artifact and rebuild + re-persist the composed IVF-PQ table against
-    * the new snapshot (same contract as [[refreshIvfIndex]] /
-    * [[refreshPqIndex]] — run it alongside them; the composed table
-    * duplicates their artifacts and must never outlive a refresh of
-    * either).
-    */
-  def refreshIvfPqIndex(s: SparkSession, d: String, indexDir: String,
-                        k: Int = 16): Unit = {
-    invalidate(d)
-    buildIvfPqIndex(s, d, indexDir, k)
-  }
-
   /** Coded (memory-true) variant of [[embeddingNearDupStream]]: the
     * probe's static side is the IVF-PQ table's (vec_id, cell, codes)
     * projection — 32x smaller than the float payload — and candidates
@@ -1419,11 +1406,7 @@ object TrainingData {
         |FROM (SELECT *, row_number() OVER
         |        (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rk FROM scored)
         |WHERE rk <= 3""".stripMargin) { (s, d) =>
-      // spread (r21): tokenize + the near-unique-key (doc, term) partial
-      // aggregate are CPU-bound and ran on the scan's 1-2 local splits;
-      // both tf and df derive from the same spread subtree so the
-      // exchange reuse below is unaffected
-      val tok = spread(docs(s, d)).select(col("doc_id"),
+      val tok = docs(s, d).select(col("doc_id"),
                                   explode(tokens(col("text"))).as("term"))
       val tf = tok.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       // df DERIVES from the per-(doc, term) table — one row per doc that
@@ -1546,8 +1529,6 @@ object TrainingData {
         |FROM t""".stripMargin) { (s, d) =>
       val stopArr = array(enStop.map(lit): _*)
       val tok = tokens(col("text"))
-      val nStop = size(filter(tok, t => array_contains(stopArr, t))).cast("double")
-      val nTok = size(tok)
       docs(s, d)
         .select(col("doc_id"), col("n_chars"), tok.as("tok"))
         .select(

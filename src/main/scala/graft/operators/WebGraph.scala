@@ -229,9 +229,6 @@ object WebGraph {
       .distinct()
   }
 
-  private def plantEdges(s: SparkSession, d: String): DataFrame =
-    plantEdgesOf(docs(s, d))
-
   /** Times the link-edge artifact was DERIVED (full or delta) this JVM
     * — the funnelDerives pin pattern: PlanSpec asserts warm q176/q177/
     * q180/q182 reads serve from the landed edge table without this

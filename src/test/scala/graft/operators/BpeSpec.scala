@@ -60,6 +60,17 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
         .groupMapReduce(identity)(_ => 1L)(_ + _),
       k)
 
+  /** The sf0.001 documents' texts, collected once for the whole suite,
+    * and the (doc_id, text) frame built from them.
+    */
+  private lazy val (sfTexts, sfFrame) = {
+    import spark.implicits._
+    val texts = graft.Tables.documents(spark, "/root/testdata/sf0.001")
+      .select("text").collect().map(_.getString(0)).toSeq
+    (texts, texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text"))
+  }
+
   test("planted corpus: merge list matches the sequential reference exactly") {
     // 'aa' dominates; 'aaa' exercises overlap (greedy takes one merge,
     // leaves a bare 'a'); after step 1 the merged symbol 'aa' must be
@@ -91,8 +102,7 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("sf0.001 corpus: full 16-merge list matches the reference") {
-    val texts = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("text").collect().map(_.getString(0)).toSeq
+    val texts = sfTexts
     val got = sparkMerges(texts, Prep.BpeK)
     val want = refFromTexts(texts, Prep.BpeK)
     assert(got.length === Prep.BpeK)
@@ -100,16 +110,32 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("distributed path (vocab above the driver ceiling) is bit-identical to the fast path and the reference") {
-    import spark.implicits._
-    val texts = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("text").collect().map(_.getString(0)).toSeq
-    val frame = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("doc_id", "text")
-    // driverVocabMax = 0 forces the k-job shuffle loop the 100 TB
+    val (texts, frame) = (sfTexts, sfFrame)
+    // driverVocabMax = 0 forces the k-round shuffle loop the 100 TB
     // vocabulary takes; -1 < any count so the fast path is impossible
     val distributed = Prep.bpeMergeList(frame, Prep.BpeK, driverVocabMax = -1L)
     assert(distributed === refFromTexts(texts, Prep.BpeK))
     assert(distributed === Prep.bpeMergeList(frame, Prep.BpeK))
+  }
+
+  test("forced distributed rounds stay within their job budget and truncate lineage every round") {
+    // the budgets are what separate sequential and batched loops ran on
+    // this input before they became one learner: 52 jobs at batch 1,
+    // k = 16, and 89 at batch 16, k = 48. The sequential loop only
+    // persisted each step, so its jobs' lineage grew by one applyMerge
+    // per step.
+    for ((k, batch, parentJobs) <- Seq((Prep.BpeK, 1, 52), (48, 16, 89))) {
+      val (merges, rdds) = org.apache.spark.graft.Jobs(spark.sparkContext)(
+        Prep.bpeMergeList(sfFrame, k, batch = batch, driverVocabMax = -1L))
+      assert(merges.length === k)
+      assert(rdds.length <= parentJobs,
+             s"batch $batch, k $k: ${rdds.length} jobs > $parentJobs")
+      // every round reads a checkpoint, so the deepest job of the last
+      // rounds spans no more RDDs than one of the first rounds
+      val third = rdds.length / 3
+      assert(rdds.takeRight(third).max <= rdds.take(third).max,
+             s"batch $batch, k $k: lineage grows, ${rdds.mkString(",")}")
+    }
   }
 
   /** Sequential reference tokenizer: apply the merge list in order. */
@@ -119,12 +145,8 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
     }.length
 
   test("q133 apply: per-doc subword counts match the reference tokenizer") {
-    import spark.implicits._
-    val texts = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("text").collect().map(_.getString(0)).toSeq
+    val (texts, frame) = (sfTexts, sfFrame)
     val merges = refFromTexts(texts, Prep.BpeK).map(m => (m._2, m._3))
-    val frame = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("doc_id", "text")
     val got = Prep.bpeTokenCounts(frame, merges)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     for ((t, i) <- texts.zipWithIndex) {
@@ -142,19 +164,12 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
 
   // ---- batched learning (production vocab size) ----------------------
 
-  private def corpusFrame() = {
-    import spark.implicits._
-    graft.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "text")
-  }
-
   /** A deterministic rich-vocabulary corpus (the sf0.001 documents
     * table holds only 31 distinct words and exhausts BPE at ~89
     * merges): ~3000 distinct pseudo-words with Zipf-ish counts, enough
     * pair mass for >1024 merges.
     */
-  private def richFrame() = {
-    import spark.implicits._
+  private def richDocs = {
     val syll = Array("ba", "ne", "tok", "ri", "zu", "pla", "mon", "dex",
                      "qu", "iv", "osh", "ka", "len", "fi", "gro", "wy")
     val docs = (0 until 600).map { d =>
@@ -166,15 +181,25 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
       }
       (d.toLong, words.mkString(" "), s"src${d % 4}")
     }
-    docs.toDF("doc_id", "text", "source")
+    docs
+  }
+
+  private def richFrame() = {
+    import spark.implicits._
+    richDocs.toDF("doc_id", "text", "source")
   }
 
   test("batched == sequential to exhaustion on sf0.001, and at k=1024 on a rich vocab") {
     // the real table: tiny vocabulary, so pin the COMPLETE merge list
-    // (both learners must stop at the same exhaustion point)
-    val frame = corpusFrame()
-    val batchedAll = Prep.bpeMergeListBatched(frame, 1024)
+    // (both learners must stop at the same exhaustion point). The two
+    // share their counting and apply code, so each is also pinned to
+    // the textbook reference, not only to the other
+    val frame = sfFrame
+    val batchedAll = Prep.bpeMergeList(frame, 1024, batch = 64)
     val seqAll = Prep.bpeMergeList(frame, 1024)
+    val refAll = refFromTexts(sfTexts, 1024)
+    assert(seqAll === refAll, "sequential learner != textbook reference")
+    assert(batchedAll === refAll, "batched learner != textbook reference")
     assert(batchedAll === seqAll,
            { val i = batchedAll.zip(seqAll).indexWhere(p => p._1 != p._2)
              s"diverged at step $i: ${batchedAll.lift(i)} vs ${seqAll.lift(i)}" })
@@ -187,9 +212,12 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
     // supports them, batched == sequential, in well under a minute
     val rich = richFrame()
     val t0 = System.nanoTime()
-    val batched = Prep.bpeMergeListBatched(rich, 1024)
+    val batched = Prep.bpeMergeList(rich, 1024, batch = 64)
     val batchedSec = (System.nanoTime() - t0) / 1e9
     val sequential = Prep.bpeMergeList(rich, 1024)
+    val ref = refFromTexts(richDocs.map(_._2), 1024)
+    assert(sequential === ref, "sequential learner != textbook reference")
+    assert(batched === ref, "batched learner != textbook reference")
     assert(batched.length === 1024, s"only ${batched.length} merges learned")
     assert(batched === sequential,
            { val i = batched.zip(sequential).indexWhere(p => p._1 != p._2)
@@ -198,23 +226,19 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("batched distributed path (forced) is bit-identical to the batched driver path") {
-    import spark.implicits._
-    val texts = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("text").collect().map(_.getString(0)).toSeq
-    val frame = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("doc_id", "text")
-    // k=48, batch=16 -> a handful of count jobs instead of 48
-    val dist = Prep.bpeMergeListBatched(frame, 48, batch = 16,
-                                        driverVocabMax = -1L)
-    val local = Prep.bpeMergeListBatched(frame, 48, batch = 16)
+    val (texts, frame) = (sfTexts, sfFrame)
+    // k=48, batch=16 -> fewer count rounds than 48
+    val dist = Prep.bpeMergeList(frame, 48, batch = 16, driverVocabMax = -1L)
+    val local = Prep.bpeMergeList(frame, 48, batch = 16)
     assert(dist === local)
     assert(dist === refFromTexts(texts, 48),
            "batched must track the sequential reference on this corpus")
+    intercept[IllegalArgumentException](Prep.bpeMergeList(frame, 48, batch = 0))
   }
 
   test("q133/q151 bodies run off the 1024-merge vocabulary; fertility strictly improves") {
     val frame = richFrame()
-    val big = Prep.bpeMergeListBatched(frame, 1024).map(m => (m._2, m._3))
+    val big = Prep.bpeMergeList(frame, 1024, batch = 64).map(m => (m._2, m._3))
     val small = big.take(Prep.BpeK)
     // big goes through the imperative encoder (> BpeFoldMax), small
     // through the chained codegen folds — both against the same corpus

@@ -45,8 +45,7 @@ class ByteBpeSpec extends AnyFunSuite with SparkSpec {
     local.foreach { case (_, l, r, _) =>
       assert((l + r).matches("([0-9a-f]{2})+"), s"non-hex symbol in ($l,$r)")
     }
-    val batched = Prep.bpeMergeListBatched(docs, 12, batch = 4,
-                                           byteLevel = true)
+    val batched = Prep.bpeMergeList(docs, 12, batch = 4, byteLevel = true)
     assert(batched === local, "batched byte-mode learning diverged")
   }
 
